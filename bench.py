@@ -1541,9 +1541,9 @@ def main() -> None:
             model_times: dict[str, float] = {}
 
             class _TimedRunner(Runner):
-                def _materialize(self, name, df):
+                def _write(self, name, df, op):
                     m0 = time.perf_counter()
-                    out = super()._materialize(name, df)
+                    out = super()._write(name, df, op)
                     model_times[name] = round(time.perf_counter() - m0, 3)
                     return out
 
@@ -1773,9 +1773,9 @@ def main() -> None:
         big_models: dict[str, float] = {}
 
         class _TimedRunnerBig(Runner):
-            def _materialize(self, name, df):
+            def _write(self, name, df, op):
                 m0 = time.perf_counter()
-                out = super()._materialize(name, df)
+                out = super()._write(name, df, op)
                 big_models[name] = round(time.perf_counter() - m0, 3)
                 return out
 

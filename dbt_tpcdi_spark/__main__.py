@@ -229,7 +229,7 @@ def main(argv: list[str] | None = None) -> int:
             spark, sources, warehouse_dir=args.warehouse,
             materialize="versioned" if args.versioned else "parquet",
         )
-        built = runner.run(targets=targets,
+        built = runner.run(targets=targets or None,
                            parallelism=args.parallelism)
         print(f"batch 1: built {len(built)} models in "
               f"{time.perf_counter() - t0:.1f}s -> {args.warehouse}")
@@ -298,14 +298,7 @@ def main(argv: list[str] | None = None) -> int:
               + (f": {', '.join(refreshed)}" if refreshed else ""))
         return 0
 
-    def read_model(model: str):
-        """Latest snapshot for versioned tables, plain parquet else."""
-        from dbt_tpcdi_spark.plans.versioned import VersionedTable, is_versioned
-
-        path = f"{args.warehouse}/{model}"
-        if is_versioned(path):
-            return VersionedTable(spark, path).read()
-        return spark.read.parquet(path)
+    from dbt_tpcdi_spark.plans.runner import read_model
 
     if args.cmd == "validate":
         # the reference's singular test plus the dbt-generic suite
@@ -313,7 +306,9 @@ def main(argv: list[str] | None = None) -> int:
         from dbt_tpcdi_spark.plans.validators import run_checks
 
         failed = 0
-        for name, n in run_checks(read_model):
+        for name, n in run_checks(
+            lambda m: read_model(spark, args.warehouse, m)
+        ):
             if n:
                 failed += 1
                 print(f"FAIL {name}: {n} violations")
@@ -322,7 +317,7 @@ def main(argv: list[str] | None = None) -> int:
         return 1 if failed else 0
 
     if args.cmd == "show":
-        read_model(args.model).show(args.n)
+        read_model(spark, args.warehouse, args.model).show(args.n)
         return 0
 
     if args.cmd in ("history", "restore", "vacuum"):

@@ -145,8 +145,9 @@ def land_batch(
        cumulative sources, reading merged/fresh upstreams from the
        warehouse (``prebuilt``) instead of recomputing them;
     3. in versioned mode, ``Runner.run`` finishes the batch with one
-       warehouse manifest commit, so every batch is a consistent
-       cross-table snapshot (``read_warehouse`` pins to it).
+       warehouse manifest commit — also when nothing downstream is
+       stale — so every batch is a consistent cross-table snapshot
+       (``read_warehouse`` pins to it).
 
     Returns (merged models, rebuilt models)."""
     deltas = batch_deltas(batch, cumulative)
@@ -159,10 +160,6 @@ def land_batch(
                 F.col("td_t_id").alias("trade_id"))
         runner.merge_refresh(name, delta_refs, replace=replace,
                              delete_keys=dk)
-    if not rebuilt:
-        if runner.materialize == "versioned":
-            runner.commit_manifest()
-        return merged, rebuilt
     runner.sources = cumulative
     models = all_models()
     prebuilt = {

@@ -1,6 +1,13 @@
 """Topological DAG materializer — the engine's analog of `dbt build`
 over Snowflake Dynamic Tables (reference README.md:209-312).
 
+``Runner.run`` is the one DAG executor: the full build, the batch
+landing's stale cone (``plans.batches.land_batch``) and the
+fingerprint refresh (``streaming.incremental.IncrementalRunner``) all
+schedule through it, and every model write — including
+``merge_refresh``'s full-table commit — goes through ``Runner._write``,
+the one place that decides how a model is stored.
+
 Materialization modes:
 
 - ``parquet`` (default): each model is written to
@@ -17,10 +24,13 @@ Materialization modes:
   isolation, any build is time-travelable, and a bad refresh is
   ``restore()``-able. This is the Snowflake-parity mode (the
   reference's tables are transactional/time-travelable for free).
+  Models declaring ``merge_partition`` are stored under an internal
+  partition manifest; the rest honor their declared ``Layout``.
 
-Correctness only needs topo order; Spark schedules each write's
-stages across all cores, so unlike dbt's 20 client threads we don't
-need model-level concurrency for a single-host run (SURVEY.md §3.2).
+Models are scheduled on a thread pool as their dependencies finish
+(``parallelism`` workers; 1 = one model at a time). Spark schedules
+each write's stages across all cores, so model-level concurrency only
+pays when many small models underutilize the cluster (SURVEY.md §3.2).
 """
 
 from __future__ import annotations
@@ -55,9 +65,9 @@ def commit_warehouse_manifest(
     until two consecutive passes agree (double-read validation — the
     snapshot is consistent iff nothing moved while it was taken);
     bail after ``max_passes`` so a continuously-committing writer
-    can't livelock the caller. Per-refresh callers (``Runner.run`` /
-    ``IncrementalRunner.refresh``) hold the single-writer role for
-    their warehouse, so pass 2 normally agrees immediately."""
+    can't livelock the caller. ``Runner.run`` (which build, batch
+    landing and refresh all go through) holds the single-writer role
+    for its warehouse, so pass 2 normally agrees immediately."""
     from dbt_tpcdi_spark.plans.versioned import VersionedTable
 
     def _enumerate() -> list[tuple[str, int]]:
@@ -123,6 +133,19 @@ def read_warehouse(
         ).read(v)
         for m, v in pins.items()
     }
+
+
+def read_model(
+    spark: SparkSession, warehouse_dir: str, name: str
+) -> DataFrame:
+    """A model's CURRENT warehouse table: the latest snapshot for a
+    versioned table, plain parquet otherwise."""
+    from dbt_tpcdi_spark.plans.versioned import VersionedTable, is_versioned
+
+    path = os.path.join(warehouse_dir, name)
+    if is_versioned(path):
+        return VersionedTable(spark, path).read()
+    return spark.read.parquet(path)
 
 
 def _key_derived(df: DataFrame, key: str, expr: str) -> bool:
@@ -216,37 +239,31 @@ class Runner:
 
     def run(
         self, targets: list[str] | None = None, parallelism: int = 1,
-        prebuilt: dict[str, DataFrame] | None = None,
+        prebuilt: dict[str, DataFrame] | None = None, op: str = "build",
     ) -> dict[str, DataFrame]:
-        """Materialize the DAG. ``parallelism > 1`` wave-schedules
-        independent models on a thread pool (the analog of the
-        reference's 20-thread dbt build, README.md:215): Spark job
-        submission is thread-safe, so sibling models' write jobs
-        overlap — useful when many small models underutilize the
-        cluster. Results are identical either way.
+        """Materialize ``targets`` and their ancestors (``None`` = every
+        model; ``[]`` = none, which in versioned mode still commits the
+        warehouse manifest). Ready models run on a ``parallelism``-wide
+        thread pool (the analog of the reference's 20-thread dbt
+        build, README.md:215): Spark job submission is thread-safe, so
+        sibling models' write jobs overlap. Results are identical for
+        any width.
 
         ``prebuilt`` seeds models that are ALREADY materialized (e.g.
         merge-refreshed SCD2 tables, or fresh tables a batch landing
-        reads from the warehouse): they resolve as dependencies but
-        are neither rebuilt nor re-written."""
+        or refresh reads from the warehouse): they resolve as
+        dependencies but are neither rebuilt nor re-written. ``op`` is
+        the commit label versioned writes record in table history.
+
+        A failing model propagates its exception once in-flight
+        siblings finish; versioned mode then commits no manifest."""
+        import concurrent.futures as cf
+
         models = all_models()
-        wanted = ancestors(models, targets) if targets else set(models)
+        wanted = (set(models) if targets is None
+                  else ancestors(models, targets))
         built: dict[str, DataFrame] = dict(prebuilt or {})
         wanted -= set(built)
-
-        if parallelism <= 1:
-            for name in topo_order(models):
-                if name not in wanted:
-                    continue
-                df = models[name].build(
-                    built.__getitem__, self.sources.__getitem__
-                )
-                built[name] = self._materialize(name, df)
-            if self.materialize == "versioned":
-                self.commit_manifest()
-            return built
-
-        import concurrent.futures as cf
 
         ts = graphlib.TopologicalSorter(
             # prebuilt deps are satisfied already — keep them out of
@@ -254,7 +271,7 @@ class Runner:
             {n: set(models[n].deps) & wanted for n in wanted}
         )
         ts.prepare()
-        with cf.ThreadPoolExecutor(max_workers=parallelism) as pool:
+        with cf.ThreadPoolExecutor(max_workers=max(1, parallelism)) as pool:
             in_flight: dict[cf.Future, str] = {}
             while ts.is_active():
                 for name in ts.get_ready():
@@ -262,7 +279,7 @@ class Runner:
                         df = models[n].build(
                             built.__getitem__, self.sources.__getitem__
                         )
-                        return self._materialize(n, df)
+                        return self._write(n, df, op)
 
                     in_flight[pool.submit(build_one)] = name
                 done, _ = cf.wait(in_flight, return_when=cf.FIRST_COMPLETED)
@@ -275,13 +292,9 @@ class Runner:
         return built
 
     def read_model(self, name: str) -> DataFrame:
-        """Read a model's CURRENT warehouse table (latest snapshot for
-        versioned tables, plain parquet otherwise) — how batch landing
-        resolves fresh upstreams without recomputing them."""
-        path = os.path.join(self.warehouse_dir, name)
-        if self.materialize == "versioned":
-            return self.table(name).read()
-        return self.spark.read.parquet(path)
+        """The model's current warehouse table — how batch landing and
+        refresh resolve fresh upstreams without recomputing them."""
+        return read_model(self.spark, self.warehouse_dir, name)
 
     def commit_manifest(self) -> int:
         """Record the run-level ``{model: version}`` snapshot manifest
@@ -303,57 +316,61 @@ class Runner:
             self.spark, self.warehouse_dir, manifest_version
         )
 
-    def _materialize(self, name: str, df: DataFrame) -> DataFrame:
+    def _write(self, name: str, df: DataFrame, op: str) -> DataFrame:
+        """Write model ``name``'s full table and return it read back —
+        the one decision of how a model is stored, shared by build,
+        refresh and ``merge_refresh``'s full-table commit:
+
+        - a ``merge_partition`` model replaces its table under the
+          internal partition manifest, so ``merge_refresh``'s
+          partition-pruned path is live from the first delta;
+        - any other versioned model commits a snapshot clustered per
+          its declared ``Layout`` with the layout's stats/bloom
+          sidecars (the way the reference's dynamic tables keep
+          Snowflake clustering across refreshes);
+        - parquet mode overwrites ``<warehouse>/<name>``.
+
+        ``op`` is the commit label recorded in versioned history."""
         if self.materialize == "lazy":
             return df
-        if self.materialize == "versioned":
-            vt = self.table(name)
-            m = all_models().get(name)
-            if m is not None and m.merge_partition is not None:
-                # establish the internal partition manifest at build
-                # time so merge_refresh's partition-pruned path is live
-                # from the first delta; overwrite=True keeps build's
-                # replace-the-table semantics
-                from pyspark.sql import functions as F
+        if self.materialize == "parquet":
+            path = os.path.join(self.warehouse_dir, name)
+            writer = df.write.mode("overwrite")
+            if name in self.partition_spec:
+                writer = writer.partitionBy(*self.partition_spec[name])
+            writer.parquet(path)
+            return self.spark.read.parquet(path)
+        vt = self.table(name)
+        m = all_models().get(name)
+        if m is not None and m.merge_partition is not None:
+            from pyspark.sql import functions as F
 
-                col, expr = m.merge_partition
-                vt.partitioned_upsert(
-                    df.withColumn(col, F.expr(expr)),
-                    key=m.scd2_key, partition_col=col,
-                    internal=True, overwrite=True,
-                    check_key_spread=not _key_derived(
-                        df, m.scd2_key, expr),
-                )
-                # internal layout col is a storage detail — reads see
-                # the model's own schema (skips inference, see read())
-                return vt.read(schema=df.schema)
-            layout = self._layout(name)
-            if layout:
-                df = apply_layout(df, layout)
-            vt.commit(
-                df, op="build",
-                partition_by=self.partition_spec.get(name)
-                or (list(layout.partition_by) or None if layout else None),
-                stats_cols=(list(layout.stats_cols) or None)
-                if layout else None,
-                bloom_cols=(list(layout.bloom_cols) or None)
-                if layout else None,
+            col, expr = m.merge_partition
+            vt.partitioned_upsert(
+                df.withColumn(col, F.expr(expr)),
+                key=m.scd2_key, partition_col=col,
+                internal=True, overwrite=True,
+                check_key_spread=not _key_derived(df, m.scd2_key, expr),
+                op=op,
             )
-            # the just-written df's schema IS the file schema for a
-            # flat snapshot — skip the per-model inference job. Hive
-            # partition_by layouts re-derive partition cols from dir
-            # names, so those fall back to inference.
-            hint = None if (
-                self.partition_spec.get(name)
-                or (layout and layout.partition_by)
-            ) else df.schema
-            return vt.read(schema=hint)
-        path = os.path.join(self.warehouse_dir, name)
-        writer = df.write.mode("overwrite")
-        if name in self.partition_spec:
-            writer = writer.partitionBy(*self.partition_spec[name])
-        writer.parquet(path)
-        return self.spark.read.parquet(path)
+            # internal layout col is a storage detail — reads see
+            # the model's own schema (skips inference, see read())
+            return vt.read(schema=df.schema)
+        layout = self._layout(name)
+        partition_by = self.partition_spec.get(name) or (
+            list(layout.partition_by) or None if layout else None)
+        if layout:
+            df = apply_layout(df, layout)
+        vt.commit(
+            df, op=op, partition_by=partition_by,
+            stats_cols=(list(layout.stats_cols) or None) if layout else None,
+            bloom_cols=(list(layout.bloom_cols) or None) if layout else None,
+        )
+        # the just-written df's schema IS the file schema for a flat
+        # snapshot — skip the per-model inference job. Hive
+        # partition_by layouts re-derive partition cols from dir
+        # names, so those fall back to inference.
+        return vt.read(schema=None if partition_by else df.schema)
 
     def _layout(self, name: str) -> Layout | None:
         """The model's declared physical layout (versioned mode honors
@@ -433,9 +450,7 @@ class Runner:
         def ref(n: str) -> DataFrame:
             if n in delta_refs:
                 return delta_refs[n]
-            if versioned:
-                return self.table(n).read()
-            return self.spark.read.parquet(os.path.join(self.warehouse_dir, n))
+            return self.read_model(n)
 
         def src(n: str) -> DataFrame:
             if n in delta_refs:
@@ -456,8 +471,8 @@ class Runner:
                 # only the partitions the delta touches — O(touched
                 # partitions + delta) instead of the full-table
                 # copy-on-write below. Falls through to the full path
-                # when the manifest is absent (legacy table, or a
-                # delete purge dropped it).
+                # (which re-establishes the manifest) for delete purges
+                # and tables without one (legacy builds).
                 return self._merge_refresh_partitioned(
                     m, vt, ref, src, replace
                 )
@@ -489,21 +504,11 @@ class Runner:
             # stays immutable, the log link is the atomic switch —
             # no swap dance, and the pre-merge version remains
             # readable/restorable
-            vt = self.table(name)
-            op = ("merge_refresh+delete" if delete_keys is not None
-                  else "merge_refresh")
-            layout = self._layout(name)
-            if layout:
-                merged = apply_layout(merged, layout)
-                vt.commit(
-                    merged, op=op,
-                    partition_by=list(layout.partition_by) or None,
-                    stats_cols=list(layout.stats_cols) or None,
-                    bloom_cols=list(layout.bloom_cols) or None,
-                )
-            else:
-                vt.commit(merged, op=op)
-            return vt.read()
+            return self._write(
+                name, merged,
+                "merge_refresh+delete" if delete_keys is not None
+                else "merge_refresh",
+            )
 
         # stage-and-swap: can't overwrite the parquet dir being read.
         # Crash-safe ordering — the live path is never absent: write

@@ -7,19 +7,18 @@ materializations); a warehouse of bare parquet directories has none of
 them — an overwrite torn by a crash corrupts readers, and there is no
 "as of yesterday". This module adds the Delta/Iceberg-shaped core
 without those libraries (not in the container, and the mechanism is
-worth owning: it is ~200 lines over any filesystem with atomic
-link/rename — which includes HDFS and posix-mode object stores):
+worth owning: it is ~200 lines over any POSIX filesystem with atomic
+``link(2)``):
 
 - A table is a directory: immutable data snapshots ``data-<v>-<uuid>/``
   plus a ``_log/`` of JSON entries, one per version.
-- **The atomic commit point is a pluggable create-if-absent**
-  (``CommitProtocol``) publishing a staged JSON as
-  ``_log/<version>.json``: ``link(2)``-EEXIST on POSIX/HDFS,
-  no-replace rename on HDFS/ABFS/GCS, conditional PUT on S3 — losing
-  the race means the version was taken, and optimistic concurrency
-  re-stages against the next number. Data files are written BEFORE
-  the log entry, so a half-written snapshot is simply never
-  referenced (crash garbage, reclaimed by ``vacuum``).
+- **The atomic commit point is a create-if-absent**
+  (``CommitProtocol``, ``HardLinkCommit`` by default) publishing a
+  staged JSON as ``_log/<version>.json`` via ``link(2)``-EEXIST —
+  losing the race means the version was taken, and optimistic
+  concurrency re-stages against the next number. Data files are
+  written BEFORE the log entry, so a half-written snapshot is simply
+  never referenced (crash garbage, reclaimed by ``vacuum``).
 - **Readers resolve a version once** (at ``read()``/``as_of()``) and
   only ever touch that snapshot's immutable directory — writers never
   block readers, and a reader's DataFrame stays valid across later
@@ -39,8 +38,6 @@ listing plus one small JSON.
 
 from __future__ import annotations
 
-import ctypes
-import errno
 import json
 import os
 import time
@@ -59,22 +56,12 @@ class CommitConflict(RuntimeError):
 # ---------------------------------------------------------------------------
 # the commit protocol seam: everything transactional in this layer
 # reduces to ONE primitive — atomically make the entry file exist with
-# its full content IFF no entry of that name exists yet. Different
-# storage systems provide it under different names:
-#
-#   - POSIX / HDFS-on-local:  link(2) (EEXIST loses)   → HardLinkCommit
-#   - HDFS / ABFS / GCS (hierarchical-namespace buckets): rename that
-#     fails when the destination exists                → RenameNoReplaceCommit
-#   - S3 (since 2024) / GCS objects: conditional PUT (If-None-Match:*)
-#     — content and name appear atomically together; a CommitProtocol
-#     impl for a real object store wraps that call directly.
-#
-# Object stores have no hard links, so the hard-link impl alone made
-# the whole warehouse (time travel, CDF, partitioned MERGE, the
-# incremental dedup index) single-machine-filesystem-only; the seam
-# plus the rename impl removes that coupling. Reference context: the
-# reference repo gets this property from Snowflake's metadata service
-# (dbt_project.yml dynamic-table materializations).
+# its full content IFF no entry of that name exists yet. link(2) gives
+# it on a POSIX filesystem (HardLinkCommit, the only implementation);
+# the seam is where the crash tests inject writers that die on either
+# side of the commit point. Reference context: the reference repo gets
+# this property from Snowflake's metadata service (dbt_project.yml
+# dynamic-table materializations).
 
 
 class CommitProtocol:
@@ -85,10 +72,9 @@ class CommitProtocol:
     def publish(self, staged: str, final: str) -> bool:
         """Make ``final`` exist with ``staged``'s full content iff no
         ``final`` exists; True on success, False when the version was
-        already taken. MAY consume ``staged`` on success (rename
-        semantics) — callers must treat the staged file as disposable
-        either way. Content must appear atomically with the name: a
-        concurrent reader must never observe a torn entry."""
+        already taken. Callers must treat the staged file as
+        disposable either way. Content must appear atomically with the
+        name: a concurrent reader must never observe a torn entry."""
         raise NotImplementedError
 
 
@@ -104,52 +90,6 @@ class HardLinkCommit(CommitProtocol):
             return True
         except FileExistsError:
             return False
-
-
-class RenameNoReplaceCommit(CommitProtocol):
-    """renameat2(..., RENAME_NOREPLACE) as CAS — the no-hard-link
-    commit point (HDFS/ABFS `rename` with fail-on-exists; the closest
-    POSIX analog of an object store's conditional create). Atomic and
-    content-complete like link(2); consumes the staged file on
-    success. Plain os.rename would silently REPLACE an existing
-    destination — that is last-writer-wins, not CAS — hence the
-    explicit no-replace flag via libc."""
-
-    name = "rename"
-    _RENAME_NOREPLACE = 1
-    _AT_FDCWD = -100
-
-    def __init__(self) -> None:
-        self._libc = ctypes.CDLL("libc.so.6", use_errno=True)
-        if not hasattr(self._libc, "renameat2"):  # pragma: no cover
-            raise OSError("libc lacks renameat2; use HardLinkCommit")
-
-    def publish(self, staged: str, final: str) -> bool:
-        r = self._libc.renameat2(
-            self._AT_FDCWD,
-            staged.encode(),
-            self._AT_FDCWD,
-            final.encode(),
-            self._RENAME_NOREPLACE,
-        )
-        if r == 0:
-            return True
-        err = ctypes.get_errno()
-        if err == errno.EEXIST:
-            return False
-        raise OSError(err, os.strerror(err))  # pragma: no cover
-
-
-def default_protocol() -> CommitProtocol:
-    """Resolve the process-default protocol: the
-    ``SPARK_TPCDI_COMMIT_PROTOCOL`` env var (``hardlink`` | ``rename``)
-    or hard-link."""
-    choice = os.environ.get("SPARK_TPCDI_COMMIT_PROTOCOL", "hardlink")
-    if choice == "rename":
-        return RenameNoReplaceCommit()
-    if choice == "hardlink":
-        return HardLinkCommit()
-    raise ValueError(f"unknown commit protocol {choice!r}")
 
 
 def _json_stat(v):
@@ -427,7 +367,7 @@ class VersionedTable:
         # the log directory is created at first commit
         self.spark = spark
         self.root = root
-        self.protocol = protocol or default_protocol()
+        self.protocol = protocol or HardLinkCommit()
 
     # -- log ---------------------------------------------------------------
 
@@ -734,7 +674,7 @@ class VersionedTable:
                 # staged content is fully written, flushed, and synced
                 # BEFORE publish — the protocol contract's "content
                 # appears atomically with the name" needs a complete
-                # staged file (rename/link carry content with them)
+                # staged file (the link carries content with it)
                 with open(staged, "w") as f:
                     json.dump(
                         {
@@ -749,9 +689,8 @@ class VersionedTable:
                     f.flush()
                     os.fsync(f.fileno())
                 # the commit point: one protocol-provided atomic
-                # create-if-absent (hard link, no-replace rename, or an
-                # object store's conditional PUT); False = a concurrent
-                # writer claimed this version — re-stage for the next
+                # create-if-absent; False = a concurrent writer
+                # claimed this version — re-stage for the next
                 if self.protocol.publish(staged, self._entry_path(version)):
                     return version
                 continue
@@ -1292,6 +1231,7 @@ class VersionedTable:
         internal: bool = False,
         overwrite: bool = False,
         check_key_spread: bool = True,
+        op: str = "partitioned_upsert",
     ) -> int:
         """MERGE that rewrites ONLY the partitions the batch touches —
         the Iceberg/Delta dynamic-partition-overwrite shape, and the
@@ -1349,7 +1289,9 @@ class VersionedTable:
         as a fresh full manifest (no anti-join, no carried-forward
         partitions) — the bootstrap/rebuild shape with overwrite
         semantics: keys absent from ``updates`` disappear, which a
-        plain upsert never does."""
+        plain upsert never does.
+
+        ``op`` is the commit label recorded in the log entry."""
         from pyspark.sql import functions as F
 
         keys = [key] if isinstance(key, str) else list(key)
@@ -1514,7 +1456,7 @@ class VersionedTable:
             try:
                 return self._commit_entry(
                     data_dir,
-                    "partitioned_upsert",
+                    op,
                     max_retries=1,
                     expected_latest=base_version,
                     extra=extra,

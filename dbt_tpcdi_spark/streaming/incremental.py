@@ -11,7 +11,9 @@ metadata-driven selective recompute:
   fingerprints (so staleness propagates exactly like
   ``target_lag: downstream``);
 - ``refresh()`` rebuilds only models whose fingerprint changed since
-  the last materialization, reusing the parquet output of fresh ones.
+  the last materialization (or whose table is missing) through
+  ``Runner.run``, reading fresh upstreams from the warehouse — so a
+  refreshed model is written exactly as a build writes it.
 
 This keeps the reference's only-ever-exercised behavior (Batch1 full
 load, then refresh-on-change; README.md:53-55 defers Batch2/3) while
@@ -27,11 +29,17 @@ import hashlib
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from dbt_tpcdi_spark.plans.registry import all_models
-from dbt_tpcdi_spark.plans.runner import topo_order
+from dbt_tpcdi_spark.plans.runner import (
+    MANIFEST_TABLE,
+    Runner,
+    ancestors,
+    topo_order,
+)
 from dbt_tpcdi_spark.plans.sources import DELIMITED_FILES, load_dag_sources
+from dbt_tpcdi_spark.plans.versioned import is_versioned
 
 
 def _file_fingerprint(path: str) -> str:
@@ -115,8 +123,12 @@ class IncrementalRunner:
 
     def refresh(self) -> dict[str, str]:
         """Bring every model up to date; returns name → 'refreshed' |
-        'fresh'."""
-        models = all_models()
+        'fresh'. A model is stale when its fingerprint moved or its
+        table is missing; the stale set rebuilds through ``Runner.run``
+        with its fresh ancestors read from the warehouse, so refresh
+        writes each model exactly as a build does. A warehouse that
+        carries a run manifest is versioned: every rebuilt model is a
+        ``refresh`` commit and the cycle ends in one manifest commit."""
         prev = self._load_state()
         if "__batches__" in prev:
             raise ValueError(
@@ -127,83 +139,26 @@ class IncrementalRunner:
                 "deltas with `build --batches ...` instead."
             )
         fps = self.compute_fingerprints()
-
-        sources_loaded: dict[str, DataFrame] | None = None
-        built: dict[str, DataFrame] = {}
-        status: dict[str, str] = {}
-        for name in topo_order(models):
-            path = os.path.join(self.warehouse_dir, name)
-            # a warehouse built with materialize="versioned" refreshes
-            # through commits, never raw overwrites into the table root
-            versioned = os.path.isdir(os.path.join(path, "_log"))
-            if fps[name] == prev.get(name) and os.path.exists(path):
-                built[name] = self._read(path, versioned)
-                status[name] = "fresh"
-                continue
-            if sources_loaded is None:
-                sources_loaded = load_dag_sources(self.spark, self.raw_dir)
-            df = models[name].build(
-                built.__getitem__, sources_loaded.__getitem__
-            )
-            if versioned:
-                from dbt_tpcdi_spark.plans.runner import apply_layout
-                from dbt_tpcdi_spark.plans.versioned import VersionedTable
-
-                # honor the model's declared physical layout on every
-                # refresh commit (same as Runner._materialize /
-                # merge_refresh) — otherwise one incremental refresh
-                # would silently strip the fact tables' skipping
-                # metadata and every pruned read would degrade to a
-                # full scan
-                mp = models[name].merge_partition
-                layout = models[name].layout
-                if mp:
-                    # keep the internal partition manifest alive across
-                    # full refreshes so merge_refresh's pruned path
-                    # stays available (same as Runner._materialize)
-                    from pyspark.sql import functions as F
-
-                    from dbt_tpcdi_spark.plans.runner import _key_derived
-
-                    VersionedTable(self.spark, path).partitioned_upsert(
-                        df.withColumn(mp[0], F.expr(mp[1])),
-                        key=models[name].scd2_key, partition_col=mp[0],
-                        internal=True, overwrite=True,
-                        check_key_spread=not _key_derived(
-                            df, models[name].scd2_key, mp[1]),
-                    )
-                elif layout:
-                    df = apply_layout(df, layout)
-                    VersionedTable(self.spark, path).commit(
-                        df, op="refresh",
-                        partition_by=list(layout.partition_by) or None,
-                        stats_cols=list(layout.stats_cols) or None,
-                        bloom_cols=list(layout.bloom_cols) or None,
-                    )
-                else:
-                    VersionedTable(self.spark, path).commit(
-                        df, op="refresh")
-            else:
-                df.write.mode("overwrite").parquet(path)
-            built[name] = self._read(path, versioned)
-            status[name] = "refreshed"
+        stale = sorted(
+            n for n, fp in fps.items()
+            if fp != prev.get(n)
+            or not os.path.exists(os.path.join(self.warehouse_dir, n))
+        )
+        versioned = is_versioned(
+            os.path.join(self.warehouse_dir, MANIFEST_TABLE))
+        runner = Runner(
+            self.spark,
+            load_dag_sources(self.spark, self.raw_dir) if stale else {},
+            self.warehouse_dir,
+            materialize="versioned" if versioned else "parquet",
+        )
+        runner.run(
+            targets=stale,
+            prebuilt={
+                n: runner.read_model(n)
+                for n in ancestors(all_models(), stale) - set(stale)
+            },
+            op="refresh",
+        )
         self._save_state(fps)
-        # one run-level manifest per refresh cycle: readers pinning it
-        # see all of this cycle's commits or none of them
-        if any(
-            os.path.isdir(os.path.join(self.warehouse_dir, n, "_log"))
-            for n in status
-        ):
-            from dbt_tpcdi_spark.plans.runner import (
-                commit_warehouse_manifest,
-            )
-
-            commit_warehouse_manifest(self.spark, self.warehouse_dir)
-        return status
-
-    def _read(self, path: str, versioned: bool) -> DataFrame:
-        if versioned:
-            from dbt_tpcdi_spark.plans.versioned import VersionedTable
-
-            return VersionedTable(self.spark, path).read()
-        return self.spark.read.parquet(path)
+        return {n: "refreshed" if n in stale else "fresh" for n in fps}

@@ -79,3 +79,18 @@ def assert_matches_oracle(spark_df, duck_con, oracle_sql: str, name: str = "") -
     assert len(got) == len(want), f"{name}: row count {len(got)} vs {len(want)}"
     pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True,
                                   obj=name or "result")
+
+
+def partitionless_windows(df) -> list[str]:
+    """Walk the optimized logical plan; return Window nodes whose
+    partition spec is empty (the 'Moving all data to a single
+    partition' pattern)."""
+    out = []
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
+            out.append(node.simpleStringWithNodeId())
+        for i in range(node.children().length()):
+            stack.append(node.children().apply(i))
+    return out

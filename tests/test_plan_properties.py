@@ -71,32 +71,6 @@ def test_global_topk_is_take_ordered(spark, name):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def _partitionless_windows(df) -> list[str]:
-    """Walk the optimized logical plan; return Window nodes whose
-    partition spec is empty (the 'Moving all data to a single
-    partition' pattern)."""
-    out = []
-    stack = [df._jdf.queryExecution().optimizedPlan()]
-    while stack:
-        node = stack.pop()
-        if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
-            out.append(node.simpleStringWithNodeId())
-        for i in range(node.children().length()):
-            stack.append(node.children().apply(i))
-    return out
-
-
-def test_no_global_window_anywhere(spark):
-    # a Window with an empty partition spec single-partitions the input;
-    # banned across the entire registered query surface
-    offenders = {}
-    for name, q in all_queries().items():
-        bad = _partitionless_windows(q.build(spark, SF_SMOKE))
-        if bad:
-            offenders[name] = bad
-    assert not offenders, offenders
-
-
 def test_pii_redaction_stays_in_codegen(spark):
     plan = _plan(spark, "pii_redaction")
     # redaction is a pure expression chain: no Python evaluation, no

@@ -15,17 +15,6 @@ from dbt_tpcdi_spark.plans import versioned as V
 from dbt_tpcdi_spark.plans.versioned import VersionedTable
 
 
-@pytest.fixture(params=["hardlink", "rename"], autouse=True)
-def commit_protocol(request, monkeypatch):
-    """Run the ENTIRE race/crash matrix under both commit protocols:
-    the hard-link CAS (POSIX/HDFS) and the no-replace rename CAS (the
-    no-hard-link shape object stores / ABFS provide). Every
-    VersionedTable in this module resolves its protocol through
-    default_protocol(), which reads this env var."""
-    monkeypatch.setenv("SPARK_TPCDI_COMMIT_PROTOCOL", request.param)
-    return request.param
-
-
 def _df(spark, *vals):
     return spark.createDataFrame([(v,) for v in vals], "x int")
 
@@ -122,7 +111,7 @@ class _DiesAfterPublish(V.CommitProtocol):
     name = "dies-after-publish"
 
     def __init__(self) -> None:
-        self._inner = V.default_protocol()
+        self._inner = V.HardLinkCommit()
 
     def publish(self, staged: str, final: str) -> bool:
         assert self._inner.publish(staged, final)
@@ -131,10 +120,9 @@ class _DiesAfterPublish(V.CommitProtocol):
 
 def test_writer_killed_between_data_write_and_commit(spark, tmp_path):
     """VERDICT r7 item 6: failure injection at the real commit path's
-    pre-publish crash point (runs under BOTH protocols via the module
-    fixture). The torn commit must be invisible to readers, a retried
-    writer must converge, and the orphan snapshot must be vacuumable
-    crash garbage."""
+    pre-publish crash point. The torn commit must be invisible to
+    readers, a retried writer must converge, and the orphan snapshot
+    must be vacuumable crash garbage."""
     root = tmp_path / "t"
     vt = VersionedTable(spark, str(root))
     vt.commit(_df(spark, 1))
@@ -1118,6 +1106,39 @@ def test_incremental_refresh_preserves_layout_metadata(spark, tmp_path):
     mt = VersionedTable(spark, os.path.join(wh, MANIFEST_TABLE))
     pins = {r["model"]: r["version"] for r in mt.read().collect()}
     assert pins["fact_trade"] == v1
+
+
+def test_incremental_refresh_rebuilds_lost_model_versioned(spark, tmp_path):
+    """A model table lost from a versioned warehouse must come back
+    from refresh as a versioned table that the refresh's manifest
+    pins — not as plain parquet that ``read_warehouse`` silently
+    drops."""
+    import shutil
+
+    from dbt_tpcdi_spark.plans.registry import all_models
+    from dbt_tpcdi_spark.plans.runner import MANIFEST_TABLE
+    from dbt_tpcdi_spark.plans.sources import load_dag_sources
+    from dbt_tpcdi_spark.streaming.incremental import IncrementalRunner
+    from dbt_tpcdi_spark.tpcdi.fixtures import generate
+
+    root = tmp_path / "fx"
+    generate(root)
+    wh = str(tmp_path / "wh")
+    sources = load_dag_sources(spark, str(root / "raw"))
+    Runner(spark, sources, warehouse_dir=wh,
+           materialize="versioned").run(parallelism=4)
+    inc = IncrementalRunner(spark, str(root / "raw"), wh)
+    inc.record_state()
+
+    shutil.rmtree(os.path.join(wh, "dim_broker"))
+    status = inc.refresh()
+    assert status["dim_broker"] == "refreshed"
+    assert V.is_versioned(os.path.join(wh, "dim_broker"))
+    vt = VersionedTable(spark, os.path.join(wh, "dim_broker"))
+    mt = VersionedTable(spark, os.path.join(wh, MANIFEST_TABLE))
+    pins = {r["model"]: r["version"] for r in mt.read().collect()}
+    assert pins["dim_broker"] == vt.latest_version()
+    assert set(pins) == set(all_models())
 
 
 def test_read_parts_prunes_manifest(spark, tmp_path):
