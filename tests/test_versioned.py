@@ -15,6 +15,14 @@ from dbt_tpcdi_spark.plans import versioned as V
 from dbt_tpcdi_spark.plans.versioned import VersionedTable
 
 
+@pytest.fixture(params=["hardlink"], autouse=True)
+def commit_protocol(request):
+    """Every VersionedTable in this module commits through the one
+    protocol, the link(2) create-if-absent CAS (HardLinkCommit); the
+    parameter names it in each test id."""
+    return request.param
+
+
 def _df(spark, *vals):
     return spark.createDataFrame([(v,) for v in vals], "x int")
 
