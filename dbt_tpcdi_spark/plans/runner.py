@@ -335,11 +335,17 @@ class Runner:
             return df
         if self.materialize == "parquet":
             path = os.path.join(self.warehouse_dir, name)
-            writer = df.write.mode("overwrite")
+            writer, reader = df.write.mode("overwrite"), self.spark.read
             if name in self.partition_spec:
                 writer = writer.partitionBy(*self.partition_spec[name])
+            else:
+                # the written df's schema IS the file schema — skip the
+                # one-task footer-inference job per model. Partitioned
+                # tables re-derive partition cols from dir names, so
+                # those keep inference.
+                reader = reader.schema(df.schema)
             writer.parquet(path)
-            return self.spark.read.parquet(path)
+            return reader.parquet(path)
         vt = self.table(name)
         m = all_models().get(name)
         if m is not None and m.merge_partition is not None:

@@ -14,6 +14,13 @@ settings that matter for (a) correctness against a DuckDB oracle and
   100 TB.
 - ``spark.sql.shuffle.partitions`` sized to cores for local runs;
   on a real cluster AQE coalescing makes the static value mostly a cap.
+- ``spark.sql.codegen.cache.maxEntries=1000``: one 45-model DAG pass
+  compiles ~315 whole-stage classes, and every pass visits them in
+  the same order — the worst case for the default 100-entry LRU, so
+  each pass re-compiled all of them (314–320 Janino compiles per
+  parquet build) and HotSpot re-JITted the fresh classes. With room
+  for a whole pass, a warm driver's second and later passes compile
+  nothing.
 """
 
 from __future__ import annotations
@@ -88,6 +95,10 @@ def get_spark(
         # data path.
         .config("spark.cleaner.periodicGC.interval", "5min")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
+        # holds a whole DAG pass (see the module docstring): ~315
+        # classes per parquet build, ~340 + 48 + 36 for a versioned
+        # bootstrap plus Batch2/3 landings
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # testdata events.parquet stores TIMESTAMP(NANOS), which Spark
         # refuses by default; read as long and convert at load
         # (sources/parquet.py restores TimestampType at µs).

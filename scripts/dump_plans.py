@@ -1,14 +1,25 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: the formatted physical plan of each
-scale-critical query at sf0.001, with the property each plan is
+"""Dump formatted physical plans.
+
+Without arguments, regenerate PLANS.md: the formatted physical plan of
+each scale-critical query at sf0.001, with the property each plan is
 expected to exhibit (the same properties tests/test_plan_properties.py
 pins). Run after plan-affecting changes:
 
     python scripts/dump_plans.py
+
+With ``--round N``, dump ``.explain("formatted")`` of every headline
+query to plans/r<N>/<name>_<suffix>.txt (suffix = before|after), the
+per-round before/after evidence of an optimization round. The
+``R<N>_PLANS_ONLY`` environment variable (comma-separated names)
+limits the dump to those queries:
+
+    python scripts/dump_plans.py --round 14 before <sf_dir>
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -157,7 +168,28 @@ SHOWCASE = {
 }
 
 
-def main() -> None:
+def dump_round(rnd: int, suffix: str, sf_dir: str) -> None:
+    from dbt_tpcdi_spark.queries import all_queries
+    from dbt_tpcdi_spark.session import get_spark
+
+    out_dir = os.path.join(REPO, "plans", f"r{rnd}")
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark(f"dump-r{rnd}-plans")
+    only = os.environ.get(f"R{rnd}_PLANS_ONLY")
+    queries = {n: q for n, q in all_queries().items() if q.headline}
+    if only:
+        queries = {n: q for n, q in queries.items() if n in only.split(",")}
+    for name in sorted(queries):
+        df = queries[name].build(spark, sf_dir)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"{name}: {len(plan.splitlines())} lines -> {path}")
+
+
+def dump_showcase() -> None:
     from dbt_tpcdi_spark.queries import all_queries
     from dbt_tpcdi_spark.session import get_spark
 
@@ -190,6 +222,23 @@ def main() -> None:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
     spark.stop()
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--round", type=int, dest="rnd",
+                    help="dump every headline plan to plans/r<N>/")
+    ap.add_argument("suffix", nargs="?", default="before",
+                    help="file suffix with --round (before|after)")
+    ap.add_argument("sf_dir", nargs="?",
+                    help="scale-factor directory to plan (with --round)")
+    args = ap.parse_args()
+    if args.rnd is None:
+        dump_showcase()
+    elif args.sf_dir is None:
+        ap.error("--round needs <suffix> <sf_dir>")
+    else:
+        dump_round(args.rnd, args.suffix, args.sf_dir)
 
 
 if __name__ == "__main__":

@@ -1,10 +1,12 @@
-"""Runner failure paths: what a warehouse looks like after a model
-fails mid-run on the thread pool."""
+"""Runner behavior: what a warehouse looks like after a model fails
+mid-run on the thread pool, and the Spark work one model write and one
+repeated DAG pass cost."""
 
 from __future__ import annotations
 
 import dataclasses
 import os
+import uuid
 
 import pytest
 
@@ -54,3 +56,49 @@ def test_failing_model_commits_no_manifest(spark, tmp_path, monkeypatch):
     for n in committed:
         VersionedTable(spark, os.path.join(wh, n)).read().count()
     assert "dim_broker" not in committed
+
+
+class _GroupedRunner(Runner):
+    """Tags every model write's Spark jobs with one job group. Job
+    groups are thread-local and ``run`` writes on pool threads, so the
+    group is set inside ``_write``, on the thread that submits."""
+
+    group = f"test-runner-{uuid.uuid4().hex}"
+
+    def _write(self, name, df, op):
+        sc = self.spark.sparkContext
+        sc.setJobGroup(self.group, name)
+        try:
+            return super()._write(name, df, op)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_parquet_write_reads_back_without_inference_job(spark, tmp_path):
+    """A parquet-mode model write launches exactly one Spark job (the
+    write): the read-back takes the written frame's schema instead of
+    running a footer-inference job per model."""
+    root = generate(tmp_path / "fx")
+    sources = load_dag_sources(spark, str(root / "raw"))
+    runner = _GroupedRunner(spark, sources, warehouse_dir=str(tmp_path / "wh"))
+    out = runner.run(targets=["hr_employee"])
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(runner.group)) == 1
+    assert out["hr_employee"].count() == sources["hr"].count() > 0
+
+
+def test_second_dag_pass_compiles_no_stage_code(spark, tmp_path):
+    """Two full parquet DAG passes in one driver: the codegen cache
+    holds a whole pass, so the second pass compiles no class at all
+    (CodegenMetrics counts one compilation-time sample per compile)."""
+    root = generate(tmp_path / "fx")
+    raw, wh = str(root / "raw"), str(tmp_path / "wh")
+    compiles = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+                .CodegenMetrics.METRIC_COMPILATION_TIME())
+    Runner(spark, load_dag_sources(spark, raw),
+           warehouse_dir=wh).run(parallelism=8)
+    first = compiles.getCount()
+    Runner(spark, load_dag_sources(spark, raw),
+           warehouse_dir=wh).run(parallelism=8)
+    assert compiles.getCount() == first
