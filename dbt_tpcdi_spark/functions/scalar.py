@@ -5,9 +5,11 @@ Spark-first notes (SURVEY.md §2.8):
   ``F.when``; Spark's own ``F.decode`` is *charset* decoding, a classic
   false friend.
 - Snowflake datetime format tokens differ from Java patterns
-  (``'yyyymmdd-hhmiss'`` vs ``'yyyyMMdd-HHmmss'``); ``snowflake_format``
-  translates the handful the reference uses (``tpcdi.py:293,453``,
-  ``finwire_financial.sql:12-13``).
+  (``'yyyymmdd-hhmiss'`` vs ``'yyyyMMdd-HHmmss'``); the sources and
+  models spell the Java pattern of each format the reference uses
+  (``tpcdi.py:293,453``, ``finwire_financial.sql:12-13``) directly —
+  'mi' (minute) vs 'mm' (month in Snowflake, minute in Java) is the
+  classic trap (SURVEY.md §7.5 hazard 2).
 - ``get_phone_number`` (reference ``tpcdi.py:174-186``) assembles
   country/area/local/ext with separators dropped for blank parts.
 """
@@ -145,37 +147,6 @@ def decode(col: Column, mapping: dict, default=None) -> Column:
         default = F.lit(default) if not isinstance(default, Column) else default
         expr = expr.otherwise(default)
     return expr
-
-
-#: Snowflake format-token → Java/Spark datetime pattern translations for
-#: every format string the reference uses. Hand-verified; 'mi' (minute)
-#: vs 'mm' (month-in-Snowflake / minute-in-Java) is the classic trap
-#: (SURVEY.md §7.5 hazard 2).
-SNOWFLAKE_FORMATS = {
-    "yyyymmdd": "yyyyMMdd",
-    "yyyymmdd-hhmiss": "yyyyMMdd-HHmmss",
-    "yyyy-mm-ddThh:mi:ss": "yyyy-MM-dd'T'HH:mm:ss",
-    "yyyy-mm-dd hh:mi:ss.ff3": "yyyy-MM-dd HH:mm:ss.SSS",
-}
-
-
-def snowflake_format(fmt: str) -> str:
-    """Translate a Snowflake datetime format string to a Java pattern."""
-    try:
-        return SNOWFLAKE_FORMATS[fmt.lower()]
-    except KeyError as exc:
-        raise ValueError(
-            f"untranslated Snowflake format {fmt!r}; add it to SNOWFLAKE_FORMATS"
-        ) from exc
-
-
-def to_timestamp_sf(col: Column, sf_fmt: str) -> Column:
-    """``to_timestamp`` taking a *Snowflake* format string."""
-    return F.to_timestamp(col, snowflake_format(sf_fmt))
-
-
-def to_date_sf(col: Column, sf_fmt: str) -> Column:
-    return F.to_date(col, snowflake_format(sf_fmt))
 
 
 def phone_number(

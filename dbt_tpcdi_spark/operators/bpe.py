@@ -1031,13 +1031,13 @@ def _train_ctes(from_table: str, text_col: str, merges: int) -> list[str]:
     and ``bpe_encode_sql``; the final CTE ``__w{merges}`` holds (word,
     wc, sp) with ``sp`` the fully-merged segmentation."""
     ctes = [
-        f"""__wc AS (
+        f"""__wc AS MATERIALIZED (
             SELECT word, cast(count(*) AS bigint) AS wc FROM (
                 SELECT unnest({tokens_sql(text_col)}) AS word
                 FROM {from_table}
             ) GROUP BY 1
         )""",
-        f"""__w0 AS (
+        f"""__w0 AS MATERIALIZED (
             SELECT word, wc, {char_spaced_sql('word')} AS sp FROM __wc
         )""",
     ]
@@ -1048,10 +1048,10 @@ def _train_ctes(from_table: str, text_col: str, merges: int) -> list[str]:
                 FROM __w{i}
             ) GROUP BY 1
         )""")
-        ctes.append(f"""__t{i} AS (
+        ctes.append(f"""__t{i} AS MATERIALIZED (
             SELECT pair FROM __p{i} ORDER BY c DESC, pair ASC LIMIT 1
         )""")
-        ctes.append(f"""__w{i + 1} AS (
+        ctes.append(f"""__w{i + 1} AS MATERIALIZED (
             SELECT word, wc,
                    trim(replace(' ' || sp || ' ',
                                 ' ' || replace((SELECT pair FROM __t{i}),

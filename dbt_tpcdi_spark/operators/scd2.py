@@ -100,17 +100,3 @@ def merge_scd2(
     # restore the existing table's column order so a merged table stays
     # positionally identical to a fresh build
     return untouched.unionByName(recomputed).select(existing.columns)
-
-
-def scd2_sql(key: str, ts: str) -> dict[str, str]:
-    """The same two derivations as ANSI SQL snippets (DuckDB-compatible),
-    for oracle authoring. Returns {'end_timestamp': ..., 'is_current': ...}."""
-    return {
-        "end_timestamp": (
-            f"coalesce(lead({ts}) over (partition by {key} order by {ts}) "
-            f"- interval 1 millisecond, timestamp '9999-12-31 23:59:59.999')"
-        ),
-        "is_current": (
-            f"row_number() over (partition by {key} order by {ts} desc) = 1"
-        ),
-    }

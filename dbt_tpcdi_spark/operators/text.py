@@ -556,18 +556,6 @@ def _max_multiplicity(arr: Column) -> Column:
     )
 
 
-def _top_ngram_frac(text_col: str, n: int) -> Column:
-    """Share of the doc's n-gram multiset taken by its most frequent
-    n-gram, as a pure Column expression — repetition scoring stays at
-    scan bandwidth (the explode + per-(doc,gram) shuffle formulation
-    this replaces moved every gram string through an exchange)."""
-    grams = ngram_list(F.col(text_col), n)
-    return F.when(
-        F.size(grams) > 0,
-        round4(_max_multiplicity(grams) / F.size(grams)),
-    ).otherwise(F.lit(0.0))
-
-
 # SINGLE-EVALUATION building blocks (r11; hoisted to module level in
 # r14 so repetition_predicate shares them verbatim): the naive
 # per-feature expression list re-derives tokens ~8x and each n-gram

@@ -7,10 +7,10 @@ materializations); a warehouse of bare parquet directories has none of
 them — an overwrite torn by a crash corrupts readers, and there is no
 "as of yesterday". This module adds the Delta/Iceberg-shaped core
 without those libraries (not in the container, and the mechanism is
-worth owning: it is ~200 lines over any POSIX filesystem with atomic
+worth owning: it needs nothing but a POSIX filesystem with atomic
 ``link(2)``):
 
-- A table is a directory: immutable data snapshots ``data-<v>-<uuid>/``
+- A table is a directory: immutable data snapshots ``data-<uuid>/``
   plus a ``_log/`` of JSON entries, one per version.
 - **The atomic commit point is a create-if-absent**
   (``CommitProtocol``, ``HardLinkCommit`` by default) publishing a
@@ -29,6 +29,12 @@ worth owning: it is ~200 lines over any POSIX filesystem with atomic
   ``vacuum`` drops snapshot dirs unreferenced by the kept tail of the
   log.
 
+Each decision is coded once: ``_snapshot`` resolves a version,
+``_write_snapshot`` writes a data directory, ``_cas`` is the retry
+loop of every commit derived from a base version, ``_skipping`` and
+``_lineage_skipping`` derive the stats/Bloom manifests, and
+``_prune_files`` is the file-skipping rule behind every ``read_where*``.
+
 At 100 TB the same design holds: commits are O(1) metadata (the data
 write is the same parquet job a bare table needs — snapshots here are
 copy-on-write per commit, and an incremental writer commits only the
@@ -46,6 +52,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 _LOG = "_log"
+
+#: Attempts of every commit loop before ``CommitConflict`` surfaces.
+_MAX_RETRIES = 10
 
 
 class CommitConflict(RuntimeError):
@@ -347,6 +356,72 @@ def _bloom_stats(
     return out
 
 
+def _prune_files(
+    files: list[str], stats: dict, bloom: dict, ranges: dict, probes: dict
+) -> list[str]:
+    """The ONE file-skipping rule behind every ``read_where*``: keep a
+    file unless its footer stats prove a range ``{col: (lo, hi)}``
+    (either bound may be None) matchless, or its Bloom bitmap proves
+    EVERY value of a probe ``{col: [values]}`` absent. A file without
+    stats/bitmap for a column is never pruned on that column —
+    skipping only drops provably-matchless files, so it is an
+    optimization, never a correctness dependency."""
+    bounds = {
+        c: (_json_stat(lo), _json_stat(hi)) for c, (lo, hi) in ranges.items()
+    }
+    positions: dict = {}  # (value, bits, k) -> bit positions
+
+    def misses(s, lo, hi) -> bool:
+        fmin, fmax, _nulls = s
+        return (hi is not None and fmin is not None and fmin > hi) or (
+            lo is not None and fmax is not None and fmax < lo)
+
+    def admits(info: dict, value) -> bool:
+        key = (value, info["bits"], info["k"])
+        if key not in positions:
+            positions[key] = _bloom_positions(value, info["bits"], info["k"])
+        return all(
+            (int(info["words"].get(str(p // _BLOOM_WORD), 0))
+             >> (p % _BLOOM_WORD)) & 1
+            for p in positions[key]
+        )
+
+    keep = []
+    for name in files:
+        fstats = stats.get(name) or {}
+        fbloom = bloom.get(name) or {}
+        if any(fstats.get(c) is not None and misses(fstats[c], lo, hi)
+               for c, (lo, hi) in bounds.items()):
+            continue
+        if any(fbloom.get(c) is not None
+               and not any(admits(fbloom[c], v) for v in values)
+               for c, values in probes.items()):
+            continue
+        keep.append(name)
+    return keep
+
+
+def _replace_keys(existing: DataFrame, updates: DataFrame, keys: list[str]):
+    """MERGE by key: ``existing`` rows whose key an update carries are
+    replaced by the updates, new keys are inserted."""
+    return existing.join(
+        updates.select(*keys).distinct(), keys, "left_anti"
+    ).unionByName(updates.select(existing.columns))
+
+
+def _conform(df: DataFrame, schema) -> DataFrame:
+    """``df`` presented in ``schema``: columns missing from ``df``
+    come back NULL, extra ones disappear, changed types cast."""
+    from pyspark.sql import functions as F
+
+    return df.select([
+        F.col(f.name).cast(f.dataType).alias(f.name)
+        if f.name in df.columns
+        else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in schema.fields
+    ])
+
+
 def is_versioned(root: str) -> bool:
     """True if ``root`` carries a commit log (cheap existence check —
     used by CLI/refresh routing so read-only operations never touch a
@@ -408,18 +483,89 @@ class VersionedTable:
         with open(path) as f:
             return json.load(f)
 
+    def _snapshot(self, version: int | None) -> tuple[int, dict]:
+        """(version, entry) of ``version``, or of the latest version
+        when it is None."""
+        version = self.latest_version() if version is None else version
+        if version is None:
+            raise ValueError(f"{self.root}: no commits yet")
+        return version, self._entry(version)
+
+    def _lineage_skipping(self, version: int) -> tuple[list, dict]:
+        """The skipping configuration snapshot ``version`` carries:
+        (stats columns, {bloom col: (bits, k)}), each from the newest
+        entry that has it. The walk goes newest-first from ``version``
+        and stops at the first entry that is not an append, so an
+        append lineage keeps its base's skipping while a plain commit
+        that dropped skipping is never overruled by a superseded
+        config from before it."""
+        stats_cols: list = []
+        sizing: dict = {}
+        for e in reversed(self.versions()):
+            if e["version"] > version:
+                continue
+            if not stats_cols and e.get("stats"):
+                stats_cols = sorted({
+                    c for f in e["stats"].values() for c in (f or {})
+                })
+            if not sizing and e.get("bloom"):
+                sizing = {
+                    c: (info["bits"], info["k"])
+                    for f in e["bloom"].values()
+                    for c, info in (f or {}).items()
+                }
+            if e.get("op") != "append" or (stats_cols and sizing):
+                break
+        return stats_cols, sizing
+
     # -- write -------------------------------------------------------------
+
+    def _write_snapshot(
+        self, df: DataFrame, partition_by: list[str] | None = None
+    ) -> str:
+        """Write ``df`` into a fresh immutable ``data-<uuid>`` directory
+        and return its name. Until a log entry references it, the
+        directory is invisible to readers (crash garbage for
+        ``vacuum``)."""
+        data_dir = f"data-{uuid.uuid4().hex[:12]}"
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(os.path.join(self.root, data_dir))
+        return data_dir
+
+    def _skipping(
+        self, data_dir: str, stats_cols: list, sizing: dict, schema
+    ) -> dict:
+        """The skipping manifests of a just-written snapshot directory,
+        keyed relative to it: ``{"stats": ...}`` from the parquet
+        footers for ``stats_cols`` and ``{"bloom": ...}`` from one
+        ``_bloom_stats`` scan per distinct ``(bits, k)`` in ``sizing``
+        ({col: (bits, k)}). ``schema`` is the written frame's schema
+        for flat snapshots (skips the scan's inference job), None for
+        ``partition_by`` layouts (partition columns live in directory
+        names, not footers)."""
+        path = os.path.join(self.root, data_dir)
+        out: dict = {}
+        if stats_cols:
+            out["stats"] = _file_stats(path, stats_cols)
+        by_sizing: dict = {}
+        for c, bits_k in sizing.items():
+            by_sizing.setdefault(bits_k, []).append(c)
+        for (bits, k), cols in by_sizing.items():
+            for name, fb in _bloom_stats(
+                self.spark, path, cols, bits=bits, hashes=k, schema=schema
+            ).items():
+                out.setdefault("bloom", {}).setdefault(name, {}).update(fb)
+        return out
 
     def commit(
         self,
         df: DataFrame,
         op: str = "overwrite",
         partition_by: list[str] | None = None,
-        max_retries: int = 10,
         stats_cols: list[str] | None = None,
         bloom_cols: list[str] | None = None,
-        bloom_bits: int = _BLOOM_BITS,
-        bloom_hashes: int = _BLOOM_HASHES,
     ) -> int:
         """Write ``df`` as a new immutable snapshot and commit it as the
         next version. Returns the committed version number.
@@ -440,49 +586,54 @@ class VersionedTable:
         the Delta/Iceberg bloom-index trick) are stored in the entry
         and ``read_where_eq`` drops every file whose bitmap proves the
         probe value absent. Costs one column-pruned scan of the
-        written files (the bloom columns only). Size ``bloom_bits`` ≈
-        10× the distinct values per FILE for a ~1% false-positive
-        rate; bitmaps live in the commit-log JSON, so beyond ~10⁵ bits
-        per file they belong in sidecar index files (the Delta bloom
-        layout) — a deliberate seam, not built here."""
+        written files (the bloom columns only). The sizing gives a
+        ~1% false-positive rate up to ~800 distinct values per FILE;
+        bitmaps live in the commit-log JSON, so much larger ones
+        belong in sidecar index files (the Delta bloom layout) — a
+        deliberate seam, not built here."""
         if bloom_cols:
             _check_bloom_col_types(df, bloom_cols)
-        data_dir = f"data-{uuid.uuid4().hex[:12]}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(self.root, data_dir))
-        extra = {}
+        data_dir = self._write_snapshot(df, partition_by)
+        extra: dict = {}
         if partition_by:
             # recorded so append() can refuse: a flat batch dir can't
             # carry hive key=value layout, and mixing the two under one
             # 'datas' snapshot makes later reads fail or drop the
             # partition column (ADVICE r10)
             extra["partition_by"] = list(partition_by)
-        if stats_cols:
-            extra["stats"] = _file_stats(
-                os.path.join(self.root, data_dir), stats_cols
-            )
-        if bloom_cols:
-            extra["bloom"] = _bloom_stats(
-                self.spark, os.path.join(self.root, data_dir),
-                bloom_cols, bits=bloom_bits, hashes=bloom_hashes,
-                # flat snapshots: the written files carry exactly
-                # df's schema — skip the inference job. partitionBy
-                # layouts keep inference (partition cols live in dir
-                # names, not footers).
-                schema=None if partition_by else df.schema,
-            )
+        extra.update(self._skipping(
+            data_dir, stats_cols or [],
+            dict.fromkeys(bloom_cols or [], (_BLOOM_BITS, _BLOOM_HASHES)),
+            None if partition_by else df.schema,
+        ))
         return self._commit_entry(
-            data_dir, op, max_retries, extra=extra or None
+            data_dir, op, _MAX_RETRIES, extra=extra or None
         )
 
-    def append(
-        self,
-        df: DataFrame,
-        max_retries: int = 10,
-        meta: dict | None = None,
-    ) -> int:
+    def _cas(self, derive) -> int:
+        """The one optimistic-concurrency loop of every DERIVED commit
+        (append, upsert, delete, compact, partitioned_upsert): resolve
+        the base version, let ``derive(base, base_entry)`` write its
+        snapshot directory (``_write_snapshot``) and return
+        ``(data_dir, op, extra)``, then publish with
+        ``expected_latest=base``. ``base``/``base_entry`` are None on
+        an empty table. Losing the race means the snapshot was computed
+        from a stale version, so the loop rebases on the winner and
+        derives again — never a blind re-link, which would silently
+        revert the winner's data."""
+        for _ in range(_MAX_RETRIES):
+            base = self.latest_version()
+            entry = None if base is None else self._entry(base)
+            data_dir, op, extra = derive(base, entry)
+            try:
+                return self._commit_entry(
+                    data_dir, op, 1, expected_latest=base, extra=extra
+                )
+            except CommitConflict:
+                continue
+        raise CommitConflict(f"{self.root}: {op} lost {_MAX_RETRIES} races")
+
+    def append(self, df: DataFrame, meta: dict | None = None) -> int:
         """APPEND-ONLY commit: write ``df`` as a NEW data directory and
         commit an entry referencing all prior directories plus it —
         O(batch) per commit instead of the copy-on-write snapshot's
@@ -503,114 +654,64 @@ class VersionedTable:
         column) — both are rejected with ValueError BEFORE the batch
         directory is written, and re-checked inside the CAS loop.
 
-        SKIPPING SURVIVES APPENDS (r10, the Delta per-add-action stats
-        shape): whatever stats/Bloom columns the current snapshot
-        carries are derived for the NEW batch directory — O(batch)
-        footer reads / one batch-sized column scan — and the entry
-        stores the union of the prior manifests (re-keyed
-        root-relative) with the batch's, so ``read_where_*`` prune
-        appended snapshots too; probes between compactions stay
-        file-pruned instead of degrading to full scans."""
+        SKIPPING SURVIVES APPENDS (the Delta per-add-action stats
+        shape): the stats/Bloom columns of the current snapshot's
+        lineage (``_lineage_skipping``, the rule ``compact`` uses) are
+        derived for the NEW batch directory — O(batch) footer reads /
+        one batch-sized column scan — and the entry stores the union
+        of the prior manifests (re-keyed root-relative) with the
+        batch's, so ``read_where_*`` prune appended snapshots too."""
         # reject partition-manifest tables BEFORE writing the batch
         # directory, so the ValueError path leaves no orphaned data
         # dir behind (ADVICE r9) — re-checked inside the CAS loop too,
         # since a concurrent writer could introduce a manifest
-        _latest0 = self.latest_version()
-        if _latest0 is not None:
-            _e0 = self._entry(_latest0)
-            if "parts" in _e0:
-                raise ValueError(
-                    "append: table has a partition manifest; use "
-                    "partitioned_upsert"
-                )
-            self._check_not_hive_partitioned(_e0)
-        stats_cols, bloom_sizing = self._inherited_skipping()
-        if bloom_sizing:
-            _check_bloom_col_types(df, sorted(bloom_sizing))
-        data_dir = f"data-{uuid.uuid4().hex[:12]}"
-        df.write.mode("overwrite").parquet(
-            os.path.join(self.root, data_dir)
-        )
-        new_stats: dict = {}
-        new_bloom: dict = {}
-        if stats_cols:
-            new_stats = {
-                f"{data_dir}/{k}": v
-                for k, v in _file_stats(
-                    os.path.join(self.root, data_dir), stats_cols
-                ).items()
-            }
-        for c, (bits, k_) in sorted(bloom_sizing.items()):
-            part = _bloom_stats(
-                self.spark, os.path.join(self.root, data_dir),
-                [c], bits=bits, hashes=k_,
-            )
-            for name, fb in part.items():
-                new_bloom.setdefault(
-                    f"{data_dir}/{name}", {}).update(fb)
-        for _ in range(max_retries):
-            latest = self.latest_version()
+        latest = self.latest_version()
+        stats_cols, sizing = [], {}
+        if latest is not None:
+            self._check_appendable(self._entry(latest))
+            stats_cols, sizing = self._lineage_skipping(latest)
+        if sizing:
+            _check_bloom_col_types(df, sorted(sizing))
+        data_dir = self._write_snapshot(df)
+        new = {
+            kind: {f"{data_dir}/{k}": v for k, v in manifest.items()}
+            for kind, manifest in self._skipping(
+                data_dir, stats_cols, sizing, df.schema).items()
+        }
+
+        def derive(base, entry):
             prior: list[str] = []
-            pstats: dict = {}
-            pbloom: dict = {}
-            if latest is not None:
-                entry = self._entry(latest)
-                if "parts" in entry:
-                    raise ValueError(
-                        "append: table has a partition manifest; use "
-                        "partitioned_upsert"
-                    )
-                self._check_not_hive_partitioned(entry)
+            old = {"stats": {}, "bloom": {}}
+            if entry is not None:
+                self._check_appendable(entry)
                 prior = list(entry.get("datas") or [entry["data"]])
-                _pf, pstats, pbloom, _pb = self._resolve_snapshot(entry)
+                _files, old["stats"], old["bloom"], _base = (
+                    self._resolve_snapshot(entry))
             extra: dict = {"datas": prior + [data_dir]}
-            merged_stats = {**pstats, **new_stats}
-            merged_bloom = {**pbloom, **new_bloom}
-            if merged_stats:
-                extra["stats"] = merged_stats
-            if merged_bloom:
-                extra["bloom"] = merged_bloom
+            for kind, manifest in old.items():
+                merged = {**manifest, **new.get(kind, {})}
+                if merged:
+                    extra[kind] = merged
             if meta:
                 extra["meta"] = meta
-            try:
-                return self._commit_entry(
-                    data_dir, "append", max_retries=1,
-                    expected_latest=latest, extra=extra,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"{self.root}: append lost {max_retries} races"
-        )
+            return data_dir, "append", extra
 
-    def _inherited_skipping(self) -> tuple[list, dict]:
-        """The skipping configuration the current snapshot lineage
-        carries: (stats column list, {bloom col: (bits, k)}) from the
-        newest entries that have each — the rule ``compact`` uses to
-        restore skipping, reused so ``append`` preserves it."""
-        stats_cols: list = []
-        bloom_sizing: dict = {}
-        for e in reversed(self.versions()):
-            if not stats_cols and e.get("stats"):
-                stats_cols = sorted({
-                    c for f in e["stats"].values() for c in (f or {})
-                })
-            if not bloom_sizing and e.get("bloom"):
-                for f in e["bloom"].values():
-                    for c, info in (f or {}).items():
-                        bloom_sizing[c] = (info["bits"], info["k"])
-            if stats_cols and bloom_sizing:
-                break
-        return stats_cols, bloom_sizing
+        return self._cas(derive)
 
-    def _check_not_hive_partitioned(self, entry: dict) -> None:
-        """Refuse to append onto a hive-partitioned snapshot: the flat
-        batch dir can't carry the key=value layout, so a mixed 'datas'
-        snapshot would fail on read (conflicting partition schemas) or
-        silently drop the partition column AFTER the commit landed.
-        Detection: the explicit ``partition_by`` flag newer commits
-        record, plus a key=value-subdir scan for entries written before
-        the flag existed. Mirrors the partition-manifest pre-check."""
+    def _check_appendable(self, entry: dict) -> None:
+        """Refuse to append onto a partition-manifest or a
+        hive-partitioned snapshot: the flat batch dir can't carry the
+        key=value layout, so a mixed 'datas' snapshot would fail on
+        read (conflicting partition schemas) or silently drop the
+        partition column AFTER the commit landed. Detection: the
+        explicit ``partition_by`` flag newer commits record, plus a
+        key=value-subdir scan for entries written before the flag
+        existed."""
+        if "parts" in entry:
+            raise ValueError(
+                "append: table has a partition manifest; use "
+                "partitioned_upsert"
+            )
         if entry.get("partition_by"):
             raise ValueError(
                 "append: snapshot was written partition_by="
@@ -655,7 +756,7 @@ class VersionedTable:
         """``expected_latest="any"`` (full-snapshot overwrite): losing a
         version race re-links the same snapshot at the next number —
         last writer wins the whole table, which is exactly overwrite
-        semantics. Derived commits (upsert/merge) must instead pass the
+        semantics. Derived commits (``_cas``) must instead pass the
         version their snapshot was COMPUTED from: losing the race then
         raises ``CommitConflict`` so the caller rebases on the winner's
         data instead of silently reverting it."""
@@ -701,7 +802,7 @@ class VersionedTable:
             if os.path.exists(staged):
                 os.unlink(staged)
 
-    def restore(self, version: int, max_retries: int = 10) -> int:
+    def restore(self, version: int) -> int:
         """Append a new commit that points at ``version``'s snapshot
         (no data movement). Partition-manifest versions restore by
         carrying the whole manifest forward."""
@@ -713,7 +814,7 @@ class VersionedTable:
             if k in entry
         }
         return self._commit_entry(
-            entry["data"], f"restore({version})", max_retries,
+            entry["data"], f"restore({version})", _MAX_RETRIES,
             extra=extra or None,
         )
 
@@ -725,9 +826,8 @@ class VersionedTable:
         """Snapshot-isolated read: resolves the (given or latest)
         version NOW; the returned DataFrame keeps reading that snapshot
         regardless of later commits. Partition-manifest versions
-        (``partitioned_upsert``) resolve to one leaf-directory read per
-        partition — a directory-listing-sized operation — re-attaching
-        the partition column from the manifest.
+        (``partitioned_upsert``) resolve to their leaf directories
+        (``_read_leaves``) — a directory-listing-sized operation.
 
         ``schema`` (optional StructType) skips parquet schema
         inference — the footer-sampling job every schemaless
@@ -736,41 +836,41 @@ class VersionedTable:
         schema); external callers normally omit it. Mismatched hints
         surface as nulls/analysis errors exactly as with any
         user-supplied reader schema."""
-        if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise ValueError(f"{self.root}: no commits yet")
-        entry = self._entry(version)
+        version, entry = self._snapshot(version)
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        if "datas" in entry:
-            return reader.parquet(*[
-                os.path.join(self.root, d) for d in entry["datas"]
-            ])
-        if "parts" not in entry:
-            return reader.parquet(
-                os.path.join(self.root, entry["data"])
-            )
+        if "parts" in entry:
+            return self._read_leaves(entry, entry["parts"], reader)
+        return reader.parquet(*[
+            os.path.join(self.root, d)
+            for d in entry.get("datas") or [entry["data"]]
+        ])
+
+    def _read_leaves(self, entry: dict, parts: dict, reader) -> DataFrame:
+        """Read the leaves ``parts`` ({value: data_dir}) of a
+        partition-manifest entry. An internal layout column
+        (``part_internal``) has nothing to re-attach, so ALL leaves
+        resolve through ONE multi-path ``reader`` scan — a driver-side
+        listing, not an N-way union whose analysis costs ~100 ms per
+        leaf on wide manifests. Otherwise each leaf is read on its own
+        and the partition value re-attached from the manifest."""
+        from functools import reduce
+
         from pyspark.sql import functions as F
 
         col, dtype = entry["part_col"], entry["part_type"]
+        leaves = [
+            (val, os.path.join(self.root, data_dir, f"{col}={val}"))
+            for val, data_dir in sorted(parts.items())
+        ]
         if entry.get("part_internal", False):
-            # internal layout column: nothing to re-attach, so ALL leaf
-            # directories resolve through ONE multi-path scan — a
-            # driver-side listing, not an N-way union whose analysis
-            # costs ~100 ms per leaf on wide manifests
-            return reader.parquet(*[
-                os.path.join(self.root, d, f"{col}={v}")
-                for v, d in sorted(entry["parts"].items())
-            ])
-        out = None
-        for val, data_dir in sorted(entry["parts"].items()):
-            leaf = self.spark.read.parquet(
-                os.path.join(self.root, data_dir, f"{col}={val}")
-            ).withColumn(col, F.lit(val).cast(dtype))
-            out = leaf if out is None else out.unionByName(leaf)
-        return out
+            return reader.parquet(*[path for _val, path in leaves])
+        return reduce(DataFrame.unionByName, [
+            self.spark.read.parquet(path).withColumn(
+                col, F.lit(val).cast(dtype))
+            for val, path in leaves
+        ])
 
     def read_parts(
         self, values: list, version: int | None = None
@@ -785,19 +885,13 @@ class VersionedTable:
         (DataFrame, {"parts_total": N, "parts_read": M}). Plain
         snapshot versions raise — use ``read_where_*`` there (those
         prune by file stats, this prunes by manifest enumeration)."""
-        if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise ValueError(f"{self.root}: no commits yet")
-        entry = self._entry(version)
+        version, entry = self._snapshot(version)
         if "parts" not in entry:
             raise ValueError(
                 "read_parts needs a partition-manifest version "
                 "(partitioned_upsert); plain snapshots prune via "
                 "read_where_*"
             )
-        from pyspark.sql import functions as F
-        col, dtype = entry["part_col"], entry["part_type"]
         wanted = {str(v) for v in values}
         keep = {
             val: data_dir
@@ -809,20 +903,8 @@ class VersionedTable:
             "parts_read": len(keep),
         }
         if not keep:
-            empty = self.read(version).limit(0)
-            return empty, report
-        if entry.get("part_internal", False):
-            return self.spark.read.parquet(*[
-                os.path.join(self.root, d, f"{col}={v}")
-                for v, d in sorted(keep.items())
-            ]), report
-        out = None
-        for val, data_dir in sorted(keep.items()):
-            leaf = self.spark.read.parquet(
-                os.path.join(self.root, data_dir, f"{col}={val}")
-            ).withColumn(col, F.lit(val).cast(dtype))
-            out = leaf if out is None else out.unionByName(leaf)
-        return out, report
+            return self.read(version).limit(0), report
+        return self._read_leaves(entry, keep, self.spark.read), report
 
     def _resolve_snapshot(self, entry) -> tuple[list, dict, dict, str]:
         """Normalize a plain or append (multi-directory) snapshot for
@@ -858,12 +940,59 @@ class VersionedTable:
         }
         return files, stats, bloom, os.path.join(self.root, d)
 
-    def _read_files(self, keep: list, base: str) -> DataFrame:
-        paths = [os.path.join(self.root, name) for name in keep]
+    def _read_pruned(
+        self, version: int | None, ranges: dict, probes: dict
+    ) -> tuple[DataFrame, dict]:
+        """The one pruned-read body behind every ``read_where*``:
+        resolve the snapshot, keep the files ``_prune_files`` cannot
+        rule out for the ranges ``{col: (lo, hi)}`` and membership
+        probes ``{col: [values]}``, read just those, and re-apply the
+        exact predicate — so the result is IDENTICAL to a full scan +
+        filter. Returns (DataFrame, {"files_total": N,
+        "files_read": M}), the skipping evidence.
+
+        Probe values are type-checked (int/str) only for columns the
+        Bloom manifest carries, since only a bitmap can misprune a
+        probe of another type. A version without the metadata the
+        predicates can use is read in full; when no file survives, an
+        empty read of the snapshot keeps the schema."""
+        from pyspark.sql import functions as F
+
+        version, entry = self._snapshot(version)
+        files, stats, bloom, base = self._resolve_snapshot(entry)
+        for col, values in probes.items():
+            if _bloom_has_col(bloom, col):
+                for v in values:
+                    _check_bloom_probe(col, v)
+
+        def pred(df: DataFrame) -> DataFrame:
+            for col, (lo, hi) in ranges.items():
+                if lo is not None:
+                    df = df.filter(F.col(col) >= lo)
+                if hi is not None:
+                    df = df.filter(F.col(col) <= hi)
+            for col, values in probes.items():
+                # one value keeps `==`: the plans of point reads stay put
+                df = df.filter(
+                    F.col(col) == values[0] if len(values) == 1
+                    else F.col(col).isin(values)
+                )
+            return df
+
+        if not (ranges and stats) and not (probes and bloom):
+            n = len(files)
+            return pred(self.read(version)), {
+                "files_total": n, "files_read": n}
+        keep = _prune_files(files, stats, bloom, ranges, probes)
+        report = {"files_total": len(files), "files_read": len(keep)}
+        if not keep:
+            return pred(self.read(version).limit(0)), report
         reader = self.spark.read
         if base:
             reader = reader.option("basePath", base)
-        return reader.parquet(*paths)
+        return pred(reader.parquet(*[
+            os.path.join(self.root, name) for name in keep
+        ])), report
 
     def read_where(
         self,
@@ -872,63 +1001,17 @@ class VersionedTable:
         hi=None,
         version: int | None = None,
     ) -> tuple[DataFrame, dict]:
-        """Stats-pruned range read: resolve the snapshot, keep only the
-        files whose footer [min, max] for ``col`` intersects [lo, hi]
-        (each bound optional), read just those, and re-apply the exact
-        predicate — so the result is IDENTICAL to a full scan + filter,
-        the skipping only removes provably-matchless files. Files
-        without usable stats are kept (conservative), as are all files
-        of versions committed without ``stats_cols`` — pruning is an
-        optimization, never a correctness dependency. NULLs never match
-        a range predicate, so all-null files (min/max None, nulls > 0
-        ... recorded as stats [None, None, n]) are skippable only when
-        stats exist; here they surface as no-stats and are kept.
-
-        Returns (DataFrame, report) where report =
-        {"files_total": N, "files_read": M} — the skipping evidence.
+        """Stats-pruned range read (``_read_pruned`` with one range):
+        read only the files whose footer [min, max] for ``col``
+        intersects [lo, hi] (each bound optional). Files without usable
+        stats are kept, as are all files of versions committed without
+        ``stats_cols``; NULLs never match a range predicate, so
+        all-null files carry no usable min/max and are kept too.
 
         At 100 TB with a range/Z-ordered layout this is the difference
         between scanning the table and scanning the handful of files
         whose key range overlaps the query window."""
-        from pyspark.sql import functions as F
-
-        if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise ValueError(f"{self.root}: no commits yet")
-        entry = self._entry(version)
-        files, stats, _bloom, base = self._resolve_snapshot(entry)
-
-        def pred(df: DataFrame) -> DataFrame:
-            c = F.col(col)
-            if lo is not None:
-                df = df.filter(c >= lo)
-            if hi is not None:
-                df = df.filter(c <= hi)
-            return df
-
-        if not stats:
-            n = len(files)
-            return pred(self.read(version)), {
-                "files_total": n, "files_read": n}
-        qlo, qhi = _json_stat(lo), _json_stat(hi)
-        keep = []
-        for name in files:
-            s = (stats.get(name) or {}).get(col)
-            if s is None:
-                keep.append(name)  # no usable stats: conservative
-                continue
-            fmin, fmax, _nulls = s
-            if qhi is not None and fmin is not None and fmin > qhi:
-                continue
-            if qlo is not None and fmax is not None and fmax < qlo:
-                continue
-            keep.append(name)
-        report = {"files_total": len(files), "files_read": len(keep)}
-        if not keep:
-            # preserve schema with an empty read of the full snapshot
-            return pred(self.read(version).limit(0)), report
-        return pred(self._read_files(keep, base)), report
+        return self._read_pruned(version, {col: (lo, hi)}, {})
 
     def read_where_in(
         self,
@@ -936,61 +1019,13 @@ class VersionedTable:
         values: list,
         version: int | None = None,
     ) -> tuple[DataFrame, dict]:
-        """IN-list Bloom pruning: a file is read iff at least ONE probe
-        value passes its bitmap (files proving every value absent are
-        dropped); the exact IN predicate is re-applied. Degenerates to
-        ``read_where_eq`` for a single value; conservative without
-        bitmaps — same contract family as the other read_where_*."""
-        from pyspark.sql import functions as F
-
+        """IN-list Bloom pruning (``_read_pruned`` with one probe): a
+        file is read iff at least ONE value passes its bitmap, and the
+        exact IN predicate is re-applied. A one-value list is
+        ``read_where_eq``."""
         if not values:
             raise ValueError("read_where_in needs a non-empty IN list")
-        if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise ValueError(f"{self.root}: no commits yet")
-        entry = self._entry(version)
-        files, _stats, bloom, base = self._resolve_snapshot(entry)
-
-        def pred(df: DataFrame) -> DataFrame:
-            return df.filter(F.col(col).isin(values))
-
-        if _bloom_has_col(bloom, col):
-            for v in values:
-                _check_bloom_probe(col, v)
-        if not bloom:
-            n = len(files)
-            return pred(self.read(version)), {
-                "files_total": n, "files_read": n}
-        pos: dict = {}  # (value, bits, k) -> positions, computed lazily
-        keep = []
-        for name in files:
-            info = (bloom.get(name) or {}).get(col)
-            if info is None:
-                keep.append(name)
-                continue
-            words = info["words"]
-            any_hit = False
-            for v in values:
-                key = (v, info["bits"], info["k"])
-                if pos.get(key) is None:
-                    pos[key] = _bloom_positions(
-                        v, info["bits"], info["k"])
-                hit = True
-                for p in pos[key]:
-                    w = int(words.get(str(p // _BLOOM_WORD), 0))
-                    if not (w >> (p % _BLOOM_WORD)) & 1:
-                        hit = False
-                        break
-                if hit:
-                    any_hit = True
-                    break
-            if any_hit:
-                keep.append(name)
-        report = {"files_total": len(files), "files_read": len(keep)}
-        if not keep:
-            return pred(self.read(version).limit(0)), report
-        return pred(self._read_files(keep, base)), report
+        return self._read_pruned(version, {}, {col: list(values)})
 
     def read_where_all(
         self,
@@ -998,80 +1033,18 @@ class VersionedTable:
         version: int | None = None,
         eq: dict | None = None,
     ) -> tuple[DataFrame, dict]:
-        """Conjunctive pruning: ``preds`` maps column → (lo, hi)
-        (either bound may be None) and ``eq`` maps column → probe
-        value (Bloom-checked); a file is read only if EVERY range
-        predicate intersects its stats AND every equality probe passes
-        its Bloom bitmap — on a Z-ordered layout with a bloom key the
-        intersection prunes multiplicatively across dims AND the
-        point key. Same exactness contract as ``read_where`` (which
-        this generalizes: one range entry ≡ read_where; one eq entry ≡
-        read_where_eq); columns without stats/bitmaps contribute no
-        pruning, never wrong answers."""
-        from pyspark.sql import functions as F
-
-        if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise ValueError(f"{self.root}: no commits yet")
-        entry = self._entry(version)
-        files, stats, bloom, base = self._resolve_snapshot(entry)
-        eq = eq or {}
-        for col, value in eq.items():
-            if _bloom_has_col(bloom, col):
-                _check_bloom_probe(col, value)
-
-        def pred(df: DataFrame) -> DataFrame:
-            for col, (lo, hi) in preds.items():
-                if lo is not None:
-                    df = df.filter(F.col(col) >= lo)
-                if hi is not None:
-                    df = df.filter(F.col(col) <= hi)
-            for col, value in eq.items():
-                df = df.filter(F.col(col) == value)
-            return df
-
-        if not stats and not bloom:
-            n = len(files)
-            return pred(self.read(version)), {
-                "files_total": n, "files_read": n}
-        keep = []
-        for name in files:
-            fstats = stats.get(name)
-            ok = True
-            for col, (lo, hi) in preds.items():
-                s = (fstats or {}).get(col)
-                if s is None:
-                    continue  # no stats for this col: can't prune on it
-                fmin, fmax, _nulls = s
-                qlo, qhi = _json_stat(lo), _json_stat(hi)
-                if qhi is not None and fmin is not None and fmin > qhi:
-                    ok = False
-                    break
-                if qlo is not None and fmax is not None and fmax < qlo:
-                    ok = False
-                    break
-            if ok:
-                for col, value in eq.items():
-                    info = (bloom.get(name) or {}).get(col)
-                    if info is None:
-                        continue  # no bitmap: can't prune on it
-                    words = info["words"]
-                    for p in _bloom_positions(
-                        value, info["bits"], info["k"]
-                    ):
-                        w = int(words.get(str(p // _BLOOM_WORD), 0))
-                        if not (w >> (p % _BLOOM_WORD)) & 1:
-                            ok = False  # proven absent
-                            break
-                    if not ok:
-                        break
-            if ok:
-                keep.append(name)
-        report = {"files_total": len(files), "files_read": len(keep)}
-        if not keep:
-            return pred(self.read(version).limit(0)), report
-        return pred(self._read_files(keep, base)), report
+        """Conjunctive pruning (``_read_pruned`` with every predicate):
+        ``preds`` maps column → (lo, hi) (either bound may be None) and
+        ``eq`` maps column → probe value; a file is read only if EVERY
+        range intersects its stats AND every probe passes its Bloom
+        bitmap — on a Z-ordered layout with a bloom key the
+        intersection prunes multiplicatively across dims AND the point
+        key. One range entry is ``read_where``; one eq entry is
+        ``read_where_eq``."""
+        return self._read_pruned(
+            version, dict(preds),
+            {col: [value] for col, value in (eq or {}).items()},
+        )
 
     def read_where_eq(
         self,
@@ -1079,13 +1052,12 @@ class VersionedTable:
         value,
         version: int | None = None,
     ) -> tuple[DataFrame, dict]:
-        """Bloom-pruned point read: keep only the files whose Bloom
-        bitmap for ``col`` has ALL probe bits set for ``value`` (a
-        Bloom miss PROVES absence; a hit may be a false positive, so
-        the exact equality predicate is re-applied — result identical
-        to full scan + filter, same contract as ``read_where``). Files
-        without a bitmap, and versions committed without
-        ``bloom_cols``, are kept conservatively.
+        """Bloom-pruned point read (``_read_pruned`` with one
+        single-value probe): keep only the files whose Bloom bitmap
+        for ``col`` has ALL probe bits set for ``value`` (a miss
+        PROVES absence; a hit may be a false positive, hence the
+        re-applied equality). Files without a bitmap, and versions
+        committed without ``bloom_cols``, are kept.
 
         This is the skipping rung for point predicates on columns the
         layout does not sort: after a Z-order on (a, b), min/max for
@@ -1094,43 +1066,7 @@ class VersionedTable:
         bitmap prunes to the handful of files that actually contain
         the key. ``value`` must render to the same string Spark's
         cast-to-string produces (int/string keys)."""
-        from pyspark.sql import functions as F
-
-        if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise ValueError(f"{self.root}: no commits yet")
-        entry = self._entry(version)
-        files, _stats, bloom, base = self._resolve_snapshot(entry)
-
-        def pred(df: DataFrame) -> DataFrame:
-            return df.filter(F.col(col) == value)
-
-        if _bloom_has_col(bloom, col):
-            _check_bloom_probe(col, value)
-        if not bloom:
-            n = len(files)
-            return pred(self.read(version)), {
-                "files_total": n, "files_read": n}
-        keep = []
-        for name in files:
-            info = (bloom.get(name) or {}).get(col)
-            if info is None:
-                keep.append(name)  # no bitmap for this col: keep
-                continue
-            words = info["words"]
-            hit = True
-            for p in _bloom_positions(value, info["bits"], info["k"]):
-                w = int(words.get(str(p // _BLOOM_WORD), 0))
-                if not (w >> (p % _BLOOM_WORD)) & 1:
-                    hit = False  # proven absent
-                    break
-            if hit:
-                keep.append(name)
-        report = {"files_total": len(files), "files_read": len(keep)}
-        if not keep:
-            return pred(self.read(version).limit(0)), report
-        return pred(self._read_files(keep, base)), report
+        return self._read_pruned(version, {}, {col: [value]})
 
     def as_of(self, timestamp: float) -> DataFrame:
         """Time travel: the table as of a wall-clock instant (latest
@@ -1144,54 +1080,25 @@ class VersionedTable:
             )
         return self.read(candidates[-1]["version"])
 
-    def upsert(
-        self,
-        updates: DataFrame,
-        key: str | list[str],
-        max_retries: int = 10,
-    ) -> int:
+    def upsert(self, updates: DataFrame, key: str | list[str]) -> int:
         """MERGE-shaped commit (dbt's incremental `merge` strategy /
         Delta MERGE INTO, last-writer-wins by key): rows whose key
         matches an update are replaced, new keys are inserted,
         untouched rows carry over. One anti-join + union — O(table)
         write but O(batch) shuffle on the key; published as a single
-        atomic commit. For versioned SCD2 history use
-        ``Runner.merge_refresh`` instead."""
+        atomic commit. On an empty table the batch IS the table. For
+        versioned SCD2 history use ``Runner.merge_refresh`` instead."""
         keys = [key] if isinstance(key, str) else list(key)
-        for _ in range(max_retries):
-            base_version = self.latest_version()
-            if base_version is None:
-                # bootstrap: the whole batch IS the table (still CAS'd —
-                # a rival seeding v0 first triggers a rebase)
-                merged = updates
-            else:
-                existing = self.read(base_version)
-                keep = existing.join(
-                    updates.select(*keys).distinct(), keys, "left_anti"
-                )
-                merged = keep.unionByName(updates.select(existing.columns))
-            data_dir = f"data-{uuid.uuid4().hex[:12]}"
-            merged.write.mode("overwrite").parquet(
-                os.path.join(self.root, data_dir)
-            )
-            try:
-                # CAS on the base version: a concurrent commit means our
-                # snapshot is stale — rebase on the winner and recompute
-                # (never blind-retry, which would silently revert it)
-                return self._commit_entry(
-                    data_dir, "upsert", max_retries=1,
-                    expected_latest=base_version,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"{self.root}: upsert lost {max_retries} races")
 
-    def delete(
-        self,
-        keys: DataFrame,
-        key: str | list[str],
-        max_retries: int = 10,
-    ) -> int:
+        def derive(base, _entry):
+            merged = updates
+            if base is not None:
+                merged = _replace_keys(self.read(base), updates, keys)
+            return self._write_snapshot(merged), "upsert", None
+
+        return self._cas(derive)
+
+    def delete(self, keys: DataFrame, key: str | list[str]) -> int:
         """DELETE-shaped commit (Delta ``DELETE WHERE key IN ...`` /
         the CDC_FLAG='D' half of MERGE): rows whose key matches are
         dropped, everything else carries over, published as a single
@@ -1201,33 +1108,20 @@ class VersionedTable:
         CAS on the base version like ``upsert``: losing a race rebases
         on the winner's data and re-derives the anti-join."""
         key_cols = [key] if isinstance(key, str) else list(key)
-        for _ in range(max_retries):
-            base_version = self.latest_version()
-            if base_version is None:
-                raise ValueError(f"{self.root}: no commits yet")
-            remaining = self.read(base_version).join(
+
+        def derive(base, _entry):
+            remaining = self.read(base).join(
                 keys.select(*key_cols).distinct(), key_cols, "left_anti"
             )
-            data_dir = f"data-{uuid.uuid4().hex[:12]}"
-            remaining.write.mode("overwrite").parquet(
-                os.path.join(self.root, data_dir)
-            )
-            try:
-                return self._commit_entry(
-                    data_dir, "delete", max_retries=1,
-                    expected_latest=base_version,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"{self.root}: delete lost {max_retries} races")
+            return self._write_snapshot(remaining), "delete", None
+
+        return self._cas(derive)
 
     def partitioned_upsert(
         self,
         updates: DataFrame,
         key: str | list[str],
         partition_col: str,
-        max_retries: int = 10,
-        keys_move_partitions: bool = False,
         internal: bool = False,
         overwrite: bool = False,
         check_key_spread: bool = True,
@@ -1246,9 +1140,9 @@ class VersionedTable:
         (anti-join-by-key + union, scoped to their leaf directories)
         and written — ``partitionBy(partition_col)`` — into this
         commit's directory only. ``read()`` resolves the manifest to
-        one leaf read per partition; ``vacuum`` keeps every directory
-        any kept manifest references; ``compact()`` folds a
-        fragmented manifest back into a single plain snapshot.
+        its leaf directories; ``vacuum`` keeps every directory any
+        kept manifest references; ``compact()`` folds a fragmented
+        manifest back into a single plain snapshot.
 
         The first partitioned_upsert on a plain (or empty) table
         rewrites it once in full to establish the manifest.
@@ -1259,19 +1153,20 @@ class VersionedTable:
         the affected-value ``collect()`` is partition-count-sized
         metadata, never data.
 
-        **The pruned path is only sound when ``partition_col`` is a
-        function of the key** (e.g. ``fp_bucket = hash(fingerprint)
-        % B``): the anti-join scans only the batch's partitions, so a
-        key whose partition value CHANGED between commits would leave
-        its old row alive in the untouched partition — duplicate keys,
-        lost MERGE semantics (Delta/Iceberg dynamic-partition MERGE
-        has the same precondition). ``keys_move_partitions=False``
-        (default) declares that dependence and cheap-checks it on the
-        batch (a key present under two partition values in one batch
-        proves the column is NOT key-derived → ``ValueError``).
-        ``keys_move_partitions=True`` drops the assumption and
-        anti-joins the FULL manifest by key — correct for moving keys
-        but O(table) per batch, the same cost as plain ``upsert``.
+        **``partition_col`` must be a function of the key** (e.g.
+        ``fp_bucket = hash(fingerprint) % B``): the anti-join scans
+        only the batch's partitions, so a key whose partition value
+        CHANGED between commits would leave its old row alive in the
+        untouched partition — duplicate keys, lost MERGE semantics
+        (Delta/Iceberg dynamic-partition MERGE has the same
+        precondition). The batch is cheap-checked for it: a key
+        present under two partition values in one batch proves the
+        column is NOT key-derived → ``ValueError``. Callers that
+        derived ``partition_col`` as a deterministic per-row
+        expression over the key columns may pass
+        ``check_key_spread=False``: such a column provably can't put
+        one key under two values, and the check is one whole-batch
+        aggregation job saved per merge.
 
         ``internal=True`` marks the partition column as a STORAGE
         DETAIL (``part_internal`` in the entry): ``read()`` /
@@ -1296,12 +1191,7 @@ class VersionedTable:
 
         keys = [key] if isinstance(key, str) else list(key)
         dtype = updates.schema[partition_col].dataType.simpleString()
-        if not keys_move_partitions and check_key_spread:
-            # callers that DERIVED partition_col as a deterministic
-            # per-row expression over the key columns may pass
-            # check_key_spread=False: such a column provably can't put
-            # one key under two values in a batch, and the groupBy
-            # probe is one whole-batch aggregation job saved per merge
+        if check_key_spread:
             bad = (
                 updates.groupBy(*keys)
                 .agg(F.countDistinct(partition_col).alias("__np"))
@@ -1314,39 +1204,28 @@ class VersionedTable:
                     f"{self.root}: key {tuple(bad[0][k] for k in keys)!r} "
                     f"appears under multiple {partition_col!r} values in "
                     "one batch — the partition column is not a function "
-                    "of the key; pass keys_move_partitions=True (full "
-                    "anti-join per batch) or derive the partition from "
-                    "the key"
+                    "of the key; derive the partition from the key"
                 )
-        for _ in range(max_retries):
-            base_version = self.latest_version()
-            base_entry = (
-                self._entry(base_version) if base_version is not None else None
+
+        def touched(df: DataFrame) -> list[str]:
+            return sorted(
+                str(r[0]) for r in df.select(partition_col).distinct().collect()
             )
+
+        def derive(base, base_entry):
+            merged, prev_parts, vals = updates, {}, None
             if overwrite:
                 # full-replace bootstrap: every value in `updates` ends
-                # up in this commit's dir, so the touched-value set can
-                # be LISTED from the written key=value dirs post-write
-                # instead of collected pre-write — the pre-write
-                # distinct() would execute the (possibly expensive)
-                # upstream plan a second time
-                merged = updates
-                prev_parts = {}
-                vals = None
-            else:
-                vals = sorted(
-                    str(r[0])
-                    for r in updates.select(partition_col)
-                    .distinct().collect()
-                )
-            if overwrite:
+                # up in this commit's dir, so the touched-value set is
+                # LISTED from the written key=value dirs post-write —
+                # a pre-write distinct() would execute the (possibly
+                # expensive) upstream plan a second time
                 pass
-            elif (
-                base_entry is not None
-                and base_entry.get("part_col") == partition_col
-                and not keys_move_partitions
+            elif base_entry is not None and (
+                base_entry.get("part_col") == partition_col
             ):
                 # pruned path: merge only the touched partitions
+                vals = touched(updates)
                 if base_entry.get("part_type") != dtype:
                     raise ValueError(
                         f"{self.root}: batch {partition_col!r} dtype "
@@ -1385,46 +1264,24 @@ class VersionedTable:
                     existing = (
                         leaf if existing is None else existing.unionByName(leaf)
                     )
-                if existing is None:
-                    merged = updates
-                else:
-                    keep = existing.join(
-                        updates.select(*keys).distinct(), keys, "left_anti"
-                    )
-                    merged = keep.unionByName(
-                        updates.select(existing.columns)
-                    )
+                if existing is not None:
+                    merged = _replace_keys(existing, updates, keys)
             elif base_entry is not None:
-                # full rewrite: plain → partitioned transition, or
-                # keys_move_partitions=True (the anti-join must see
-                # EVERY partition so a key's old row in its previous
-                # partition is dropped, not carried forward)
+                # full rewrite: the plain → partitioned transition (the
+                # anti-join sees EVERY row of the old snapshot)
                 if internal:
                     # internal reads drop the partition column, so the
                     # full-rewrite path (which anti-joins the whole
                     # read) can't reconstruct it for carried rows
                     raise ValueError(
                         f"{self.root}: internal-partition merge needs "
-                        f"an existing {partition_col!r} manifest with "
-                        "keys_move_partitions=False; bootstrap or "
-                        "re-partition with overwrite=True"
+                        f"an existing {partition_col!r} manifest; "
+                        "bootstrap or re-partition with overwrite=True"
                     )
-                existing = self.read(base_version)
-                keep = existing.join(
-                    updates.select(*keys).distinct(), keys, "left_anti"
-                )
-                merged = keep.unionByName(updates.select(existing.columns))
-                prev_parts = {}
-                vals = sorted(
-                    str(r[0])
-                    for r in merged.select(partition_col)
-                    .distinct()
-                    .collect()
-                )
+                merged = _replace_keys(self.read(base), updates, keys)
+                vals = touched(merged)
             else:
-                merged = updates
-                prev_parts = {}
-            data_dir = f"data-{uuid.uuid4().hex[:12]}"
+                vals = touched(updates)
             if internal:
                 # cluster by partition value before the partitionBy
                 # write: otherwise every shuffle task writes a sliver
@@ -1432,9 +1289,7 @@ class VersionedTable:
                 # small files per commit, the classic dynamic-partition
                 # write explosion
                 merged = merged.repartition(F.col(partition_col))
-            merged.write.mode("overwrite").partitionBy(partition_col).parquet(
-                os.path.join(self.root, data_dir)
-            )
+            data_dir = self._write_snapshot(merged, [partition_col])
             if vals is None:
                 # overwrite bootstrap: enumerate the values the write
                 # actually produced (safe because partition values are
@@ -1445,27 +1300,16 @@ class VersionedTable:
                     for d in os.listdir(os.path.join(self.root, data_dir))
                     if d.startswith(prefix)
                 )
-            parts = {**prev_parts, **{v: data_dir for v in vals}}
             extra = {
-                "parts": parts,
+                "parts": {**prev_parts, **{v: data_dir for v in vals}},
                 "part_col": partition_col,
                 "part_type": dtype,
             }
             if internal:
                 extra["part_internal"] = True
-            try:
-                return self._commit_entry(
-                    data_dir,
-                    op,
-                    max_retries=1,
-                    expected_latest=base_version,
-                    extra=extra,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"{self.root}: partitioned_upsert lost {max_retries} races"
-        )
+            return data_dir, op, extra
+
+        return self._cas(derive)
 
     def read_conformed(self, version: int) -> DataFrame:
         """Time travel with schema evolution: the old snapshot presented
@@ -1473,17 +1317,7 @@ class VersionedTable:
         back NULL, dropped ones disappear, changed types cast. Lets
         code written against today's schema consume any historical
         version (the Delta/Iceberg schema-merge read behavior)."""
-        from pyspark.sql import functions as F
-
-        current = self.read().schema
-        old = self.read(version)
-        cols = [
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in old.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in current.fields
-        ]
-        return old.select(cols)
+        return _conform(self.read(version), self.read().schema)
 
     def changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Change data feed between two versions (Delta CDF-shaped):
@@ -1494,23 +1328,15 @@ class VersionedTable:
         which is the floor without per-commit row lineage."""
         from pyspark.sql import functions as F
 
-        if to_version is None:
-            to_version = self.latest_version()
         new = self.read(to_version)
         old = self.read(from_version)
         if [
             (f.name, f.dataType) for f in old.schema.fields
         ] != [(f.name, f.dataType) for f in new.schema.fields]:
             # schema evolution between the versions: conform the old
-            # snapshot to the TO schema (added cols NULL, dropped cols
-            # gone) so the multiset diff is well-defined
-            cols = [
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in old.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in new.schema.fields
-            ]
-            old = old.select(cols)
+            # snapshot to the TO schema so the multiset diff is
+            # well-defined
+            old = _conform(old, new.schema)
         inserts = new.exceptAll(old).withColumn("_change_type", F.lit("insert"))
         deletes = old.exceptAll(new).withColumn("_change_type", F.lit("delete"))
         return inserts.unionByName(deletes)
@@ -1518,7 +1344,6 @@ class VersionedTable:
     def compact(
         self,
         target_files: int = 1,
-        max_retries: int = 10,
         zorder: tuple[str, str] | None = None,
         range_by: list[str] | None = None,
     ) -> int:
@@ -1536,96 +1361,35 @@ class VersionedTable:
         normalized interleave (both dims prune); ``range_by`` is the
         single-dim sort. Exclusive.
 
-        Skipping metadata SURVIVES compaction: whichever of
-        stats/bloom the source version carried is re-derived for the
-        rewritten files (same columns, same bloom sizing) — otherwise
-        routine maintenance would silently turn every pruned read
-        back into a full scan."""
+        Skipping metadata SURVIVES compaction: the stats/bloom columns
+        of the source version's lineage (``_lineage_skipping``) are
+        re-derived for the rewritten files (same columns, same bloom
+        sizing) — otherwise routine maintenance would silently turn
+        every pruned read back into a full scan."""
         if zorder and range_by:
             raise ValueError("compact: zorder and range_by are exclusive")
-        for _ in range(max_retries):
-            latest = self.latest_version()
-            if latest is None:
-                raise ValueError(f"{self.root}: no commits yet")
-            src = self._entry(latest)
+        self._snapshot(None)  # an empty table raises: nothing to compact
+
+        def derive(base, _entry):
+            src = self.read(base)
             if zorder:
                 from dbt_tpcdi_spark.operators.layout import (
                     zorder_repartition_normalized,
                 )
 
                 df = zorder_repartition_normalized(
-                    self.read(latest), zorder[0], zorder[1],
-                    target_files,
+                    src, zorder[0], zorder[1], target_files
                 )
             elif range_by:
-                df = self.read(latest).repartitionByRange(
-                    target_files, *range_by
-                )
+                df = src.repartitionByRange(target_files, *range_by)
             else:
-                df = self.read(latest).coalesce(target_files)
-            data_dir = f"data-{uuid.uuid4().hex[:12]}"
-            df.write.mode("overwrite").parquet(
-                os.path.join(self.root, data_dir)
-            )
-            extra = {}
-            # r10 appends DO carry merged per-file manifests, but an
-            # append lineage can still be manifest-less if it stems
-            # from a skipping-less base, so a compact that follows
-            # appends must RESTORE skipping, not drop it. The scan is
-            # bounded to the CURRENT snapshot's append lineage —
-            # newest-first, stopping at the newest non-append entry —
-            # so compacting a table whose latest plain commit
-            # deliberately dropped skipping does NOT resurrect a
-            # superseded config from pre-rewrite history.
-            src_stats = src.get("stats")
-            src_bloom_src = src.get("bloom")
-            if src_stats is None or src_bloom_src is None:
-                for e in reversed(self.versions()):
-                    if e["version"] > latest:
-                        continue
-                    if src_stats is None and e.get("stats"):
-                        src_stats = e["stats"]
-                    if src_bloom_src is None and e.get("bloom"):
-                        src_bloom_src = e["bloom"]
-                    if (src_stats is not None
-                            and src_bloom_src is not None):
-                        break
-                    if e.get("op") != "append":
-                        break  # left the append lineage
-            if src_stats:
-                cols = sorted({
-                    c for f in src_stats.values() for c in (f or {})
-                })
-                if cols:
-                    extra["stats"] = _file_stats(
-                        os.path.join(self.root, data_dir), cols
-                    )
-            src_bloom = src_bloom_src
-            if src_bloom:
-                sizing: dict[str, tuple[int, int]] = {}
-                for f in src_bloom.values():
-                    for c, info in (f or {}).items():
-                        sizing[c] = (info["bits"], info["k"])
-                bl: dict = {}
-                for c, (bits, k) in sizing.items():
-                    part = _bloom_stats(
-                        self.spark, os.path.join(self.root, data_dir),
-                        [c], bits=bits, hashes=k,
-                    )
-                    for name, fb in part.items():
-                        bl.setdefault(name, {}).update(fb)
-                extra["bloom"] = bl
-            try:
-                # CAS like upsert: this snapshot derives from `latest`,
-                # so losing the race must rebase on the winner's data,
-                # never re-link the stale compaction over it
-                return self._commit_entry(
-                    data_dir, f"compact({latest})", max_retries=1,
-                    expected_latest=latest, extra=extra or None,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"{self.root}: compact lost {max_retries} races")
+                df = src.coalesce(target_files)
+            data_dir = self._write_snapshot(df)
+            stats_cols, sizing = self._lineage_skipping(base)
+            extra = self._skipping(data_dir, stats_cols, sizing, df.schema)
+            return data_dir, f"compact({base})", extra or None
+
+        return self._cas(derive)
 
     # -- maintenance -------------------------------------------------------
 

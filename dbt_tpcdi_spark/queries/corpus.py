@@ -1609,7 +1609,7 @@ def _mmr_oracle(k: int = _MMR_K) -> str:
         SELECT e.vec_id, e.embedding, {rel} AS rel
         FROM embeddings e CROSS JOIN q WHERE e.vec_id <> 0
     ),
-    sel1 AS (
+    sel1 AS MATERIALIZED (
         SELECT vec_id, cast(1 AS bigint) AS step,
                cast(2 * rel AS bigint) AS score
         FROM base ORDER BY 2 * rel DESC, vec_id LIMIT 1
@@ -1620,7 +1620,7 @@ def _mmr_oracle(k: int = _MMR_K) -> str:
             f"SELECT vec_id FROM sel{i}" for i in range(1, n)
         )
         parts.append(
-            f"""pick{n} AS (
+            f"""pick{n} AS MATERIALIZED (
         SELECT b.vec_id,
                cast(2 * b.rel - max({sim}) AS bigint) AS score
         FROM base b JOIN embeddings s
@@ -1628,7 +1628,7 @@ def _mmr_oracle(k: int = _MMR_K) -> str:
         WHERE b.vec_id NOT IN ({prev})
         GROUP BY b.vec_id, b.rel
     ),
-    sel{n} AS (
+    sel{n} AS MATERIALIZED (
         SELECT vec_id, cast({n} AS bigint) AS step, score
         FROM pick{n} ORDER BY score DESC, vec_id LIMIT 1
     )"""
@@ -2032,7 +2032,8 @@ def _bpe_persisted_oracle() -> str:
             f"WHERE {md5_mod_sql('doc_id', _BPEP_MOD, _BPEP_SALT)} <> 0)")
     ctes = B._train_ctes(base, "text", _BPEP_MERGES)
     ctes.append(
-        f"__fw0 AS (SELECT word, {B.char_spaced_sql('word')} AS sp "
+        f"__fw0 AS MATERIALIZED (SELECT word, "
+        f"{B.char_spaced_sql('word')} AS sp "
         "FROM wc)"
     )
     for i in range(_BPEP_MERGES):
@@ -2040,7 +2041,7 @@ def _bpe_persisted_oracle() -> str:
         pat = (f"' ' || replace(coalesce({sel}, {B._NOMATCH}), "
                f"' ', '{B.SEP}') || ' '")
         rep = f"' ' || replace(coalesce({sel}, ''), ' ', '') || ' '"
-        ctes.append(f"""__fw{i + 1} AS (
+        ctes.append(f"""__fw{i + 1} AS MATERIALIZED (
             SELECT word, trim(replace(' ' || sp || ' ', {pat}, {rep}))
                 AS sp
             FROM __fw{i}

@@ -222,7 +222,8 @@ def test_upsert_rebases_on_commit_race(spark, tmp_path):
     real_commit_entry = vt._commit_entry
     calls = {"n": 0}
 
-    def racing_commit_entry(data_dir, op, max_retries, expected_latest="any"):
+    def racing_commit_entry(data_dir, op, max_retries, expected_latest="any",
+                            **kw):
         if calls["n"] == 0:
             calls["n"] += 1
             entry = {"version": 1, "data": rival_dir, "op": "rival",
@@ -230,7 +231,8 @@ def test_upsert_rebases_on_commit_race(spark, tmp_path):
             with open(_os.path.join(str(tmp_path / "t"), "_log",
                                     "0000000001.json"), "w") as f:
                 _json.dump(entry, f)
-        return real_commit_entry(data_dir, op, max_retries, expected_latest)
+        return real_commit_entry(data_dir, op, max_retries, expected_latest,
+                                 **kw)
 
     vt._commit_entry = racing_commit_entry
     vt.upsert(spark.createDataFrame([(3, 30)], "k int, v int"), key="k")
@@ -822,6 +824,54 @@ def test_compact_skipping_restore_bounded_to_append_lineage(
     t2.append(df.limit(10))
     v2 = t2.compact(target_files=1)
     assert t2._entry(v2).get("stats"), t2._entry(v2)
+
+
+def test_append_skipping_follows_current_lineage(spark, tmp_path):
+    """append() derives skipping by compact()'s lineage rule: a plain
+    commit that dropped a Bloom column (the column too) ends the
+    lineage, so a later append of a frame without that column lands
+    with no Bloom manifest instead of failing on the superseded
+    config."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.commit(spark.createDataFrame([(1, "a"), (2, "b")], "x int, s string"),
+             bloom_cols=["s"])
+    t.commit(_df(spark, 3))
+    v = t.append(_df(spark, 4))
+    assert "bloom" not in t._entry(v)
+    assert _vals(t.read()) == [3, 4]
+
+
+def test_read_where_variants_agree(spark, tmp_path):
+    """The four pruned readers share one routine: on a stats+Bloom
+    table, plain and append-grown, a one-range read_where_all is
+    read_where, a one-probe read_where_all is read_where_eq, and a
+    one-value read_where_in is read_where_eq — same rows, same
+    report."""
+    df = spark.range(0, 400).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+    plain = VersionedTable(spark, str(tmp_path / "plain"))
+    plain.commit(df.repartitionByRange(8, "k"),
+                 stats_cols=["k"], bloom_cols=["k", "v"])
+    grown = VersionedTable(spark, str(tmp_path / "grown"))
+    grown.commit(df.filter("k < 200").repartitionByRange(4, "k"),
+                 stats_cols=["k"], bloom_cols=["k", "v"])
+    v = grown.append(df.filter("k >= 200").repartitionByRange(4, "k"))
+    assert grown._entry(v).get("stats") and grown._entry(v).get("bloom")
+
+    def rows(got):
+        frame, report = got
+        return sorted(tuple(r) for r in frame.collect()), report
+
+    for t in (plain, grown):
+        rng = rows(t.read_where("k", 50, 260))
+        assert 0 < rng[1]["files_read"] < rng[1]["files_total"], rng[1]
+        assert rows(t.read_where_all({"k": (50, 260)})) == rng
+        for col, value in (("k", 123), ("v", 3), ("k", 10**6)):
+            eq = rows(t.read_where_eq(col, value))
+            assert rows(t.read_where_all({}, eq={col: value})) == eq
+            assert rows(t.read_where_in(col, [value])) == eq
+        _, rep = t.read_where_eq("k", 123)
+        assert rep["files_read"] < rep["files_total"], rep
 
 
 def test_warehouse_manifest_double_pass_settles(spark, tmp_path, monkeypatch):
