@@ -1267,8 +1267,9 @@ class VersionedTable:
                 if existing is not None:
                     merged = _replace_keys(existing, updates, keys)
             elif base_entry is not None:
-                # full rewrite: the plain → partitioned transition (the
-                # anti-join sees EVERY row of the old snapshot)
+                # full rewrite: a plain snapshot (or a manifest on
+                # another column) becomes this column's manifest; the
+                # anti-join sees EVERY row of the old snapshot
                 if internal:
                     # internal reads drop the partition column, so the
                     # full-rewrite path (which anti-joins the whole
