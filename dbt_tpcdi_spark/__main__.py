@@ -23,6 +23,23 @@ import sys
 import time
 
 
+def _print_checks(resolve) -> int:
+    """Run the data tests — the reference's singular test plus the
+    dbt-generic suite (unique / not_null / relationships /
+    accepted_values) — over ``resolve(model)``, print one PASS/FAIL
+    line each, and return the exit code (1 on any violation)."""
+    from dbt_tpcdi_spark.plans.validators import run_checks
+
+    failed = 0
+    for name, n in run_checks(resolve):
+        if n:
+            failed += 1
+            print(f"FAIL {name}: {n} violations")
+        else:
+            print(f"PASS {name}")
+    return 1 if failed else 0
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="dbt_tpcdi_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -37,7 +54,8 @@ def main(argv: list[str] | None = None) -> int:
                         "pulls every downstream descendant")
     b.add_argument("--versioned", action="store_true",
                    help="materialize models as versioned tables "
-                        "(snapshot isolation, time travel, restore)")
+                        "(snapshot isolation, time travel, restore); "
+                        "implied when --batches lists a later batch")
     b.add_argument("--batches", default="1",
                    help="comma-separated batch numbers, e.g. 1,2,3: "
                         "batch 1 is the full historical build from "
@@ -46,8 +64,9 @@ def main(argv: list[str] | None = None) -> int:
                         "(override with --batch-dir N=PATH) via "
                         "row-level SCD2 merge + CDC deletes, then "
                         "rebuilds only the stale downstream models; "
-                        "with --versioned every batch commits one "
-                        "warehouse manifest")
+                        "a later batch makes the warehouse versioned, "
+                        "and every batch commits one warehouse "
+                        "manifest")
     b.add_argument("--batch-dir", action="append", default=[],
                    metavar="N=PATH",
                    help="explicit raw dir for batch N (repeatable)")
@@ -227,7 +246,9 @@ def main(argv: list[str] | None = None) -> int:
         sources = load_dag_sources(spark, args.raw_dir)
         runner = Runner(
             spark, sources, warehouse_dir=args.warehouse,
-            materialize="versioned" if args.versioned else "parquet",
+            # deltas land only on versioned tables
+            materialize=("versioned" if args.versioned or len(batches) > 1
+                         else "parquet"),
         )
         built = runner.run(targets=targets or None,
                            parallelism=args.parallelism)
@@ -269,16 +290,7 @@ def main(argv: list[str] | None = None) -> int:
                 inc.mark_batches_landed(batches)
 
         if args.validate:
-            from dbt_tpcdi_spark.plans.validators import run_checks
-
-            failed = 0
-            for name, nviol in run_checks(runner.read_model):
-                if nviol:
-                    failed += 1
-                    print(f"FAIL {name}: {nviol} violations")
-                else:
-                    print(f"PASS {name}")
-            return 1 if failed else 0
+            return _print_checks(runner.read_model)
         return 0
 
     if args.cmd == "refresh":
@@ -301,20 +313,7 @@ def main(argv: list[str] | None = None) -> int:
     from dbt_tpcdi_spark.plans.runner import read_model
 
     if args.cmd == "validate":
-        # the reference's singular test plus the dbt-generic suite
-        # (unique / not_null / relationships / accepted_values)
-        from dbt_tpcdi_spark.plans.validators import run_checks
-
-        failed = 0
-        for name, n in run_checks(
-            lambda m: read_model(spark, args.warehouse, m)
-        ):
-            if n:
-                failed += 1
-                print(f"FAIL {name}: {n} violations")
-            else:
-                print(f"PASS {name}")
-        return 1 if failed else 0
+        return _print_checks(lambda m: read_model(spark, args.warehouse, m))
 
     if args.cmd == "show":
         read_model(spark, args.warehouse, args.model).show(args.n)
@@ -326,7 +325,7 @@ def main(argv: list[str] | None = None) -> int:
         path = f"{args.warehouse}/{args.model}"
         if not is_versioned(path):
             print(f"{args.model} is not a versioned table "
-                  f"(build with --versioned)")
+                  f"(build with --versioned or --batches 1,2,...)")
             return 2
         vt = VersionedTable(spark, path)
         if args.cmd == "history":

@@ -6,9 +6,12 @@ model declares ``merge_partition``) + the CDC delete feed, then
 rebuild exactly the stale downstream cone reading everything else
 from the warehouse.
 
-One implementation serves both surfaces: the CLI
-(``python -m dbt_tpcdi_spark build --batches 1,2,3``) and the
-``dag_batches_cli`` / ``dag_incremental_*`` driver gates.
+One implementation serves every surface: the CLI
+(``python -m dbt_tpcdi_spark build --batches 1,2,3``), the fingerprint
+refresh (``rebuild_stale``) and the ``dag_batches_cli`` /
+``dag_incremental_*`` / ``dag_batch_audit`` / ``streaming_dag_refresh``
+driver gates. Deltas land on versioned warehouses only
+(``Runner.merge_refresh``).
 
 Batch semantics (TPC-DI spec §4.5-ish, re-derived from the file
 formats the reference ingests):
@@ -29,18 +32,50 @@ from pyspark.sql import functions as F
 from dbt_tpcdi_spark.plans.registry import all_models
 from dbt_tpcdi_spark.plans.runner import Runner, ancestors, topo_order
 
-#: SCD2 models merged in topo order (companies before
-#: securities/financials — their temporal joins read the refreshed
-#: companies table).
-SCD2_MERGE_ORDER = (
-    "accounts", "customers", "companies", "securities", "financials",
-    "trades_history",
-)
-
 
 def bronze(name: str, src_df: DataFrame) -> DataFrame:
     """Run a bronze builder over an in-memory source frame."""
     return all_models()[name].build(None, lambda _n: src_df)
+
+
+def _trade_refs(batch: dict, cumulative: dict) -> dict:
+    """trades_history's delta: the COMPLETE cumulative history and
+    final Trade row of every trade the batch touches — replace mode
+    rewrites every version of a touched key. A delete-only drop has
+    no delta (the purge alone)."""
+    if "trade_history" not in batch:
+        return {}
+    touched = batch["trade_history"].select("th_t_id").distinct()
+    return {
+        "brokerage_trade_history": cumulative["trade_history"].join(
+            touched, "th_t_id", "left_semi"),
+        "brokerage_trade": cumulative["trade"].join(
+            touched.withColumnRenamed("th_t_id", "t_id"),
+            "t_id", "left_semi"),
+    }
+
+
+#: SCD2 model → (batch feeds, any of which merges it; delta refs from
+#: (batch, cumulative); replace mode), in merge order: companies
+#: before securities/financials — their temporal joins read the
+#: refreshed companies table.
+_MERGES = {
+    "accounts": (("customer_mgmt",), lambda b, _c: {
+        "crm_customer_mgmt": b["customer_mgmt"]}, False),
+    "customers": (("customer_mgmt",), lambda b, _c: {
+        "crm_customer_mgmt": b["customer_mgmt"]}, False),
+    "companies": (("cmp",), lambda b, _c: {
+        "finwire_company": b["cmp"]}, False),
+    "securities": (("sec",), lambda b, _c: {
+        "finwire_security": bronze("finwire_security", b["sec"])}, False),
+    "financials": (("fin",), lambda b, _c: {
+        "finwire_financial": bronze("finwire_financial", b["fin"])}, False),
+    "trades_history": (("trade_history", "trade_deletes"), _trade_refs,
+                       True),
+}
+
+#: SCD2 models merged in topo order
+SCD2_MERGE_ORDER = tuple(_MERGES)
 
 
 def combine_batch(base: dict, delta: dict) -> dict:
@@ -67,36 +102,14 @@ def combine_batch(base: dict, delta: dict) -> dict:
 
 
 def batch_deltas(batch: dict, cumulative: dict) -> dict:
-    """Per-model (delta_refs, replace) for one merge round — only for
-    models whose feeds are present in the batch drop. ``cumulative``
-    supplies the COMPLETE history of touched trades — replace mode
-    rewrites every version of a touched key."""
-    out: dict = {}
-    if "customer_mgmt" in batch:
-        out["accounts"] = (
-            {"crm_customer_mgmt": batch["customer_mgmt"]}, False)
-        out["customers"] = (
-            {"crm_customer_mgmt": batch["customer_mgmt"]}, False)
-    if "cmp" in batch:
-        out["companies"] = ({"finwire_company": batch["cmp"]}, False)
-    if "sec" in batch:
-        out["securities"] = (
-            {"finwire_security": bronze("finwire_security", batch["sec"])},
-            False)
-    if "fin" in batch:
-        out["financials"] = (
-            {"finwire_financial": bronze("finwire_financial", batch["fin"])},
-            False)
-    if "trade_history" in batch:
-        touched = batch["trade_history"].select("th_t_id").distinct()
-        out["trades_history"] = ({
-            "brokerage_trade_history": cumulative["trade_history"].join(
-                touched, "th_t_id", "left_semi"),
-            "brokerage_trade": cumulative["trade"].join(
-                touched.withColumnRenamed("th_t_id", "t_id"),
-                "t_id", "left_semi"),
-        }, True)
-    return out
+    """Per-model (delta_refs, replace) for one merge round, in merge
+    order — only for models one of whose feeds is in the batch drop.
+    ``cumulative`` supplies the COMPLETE history of touched trades."""
+    return {
+        name: (refs(batch, cumulative), replace)
+        for name, (feeds, refs, replace) in _MERGES.items()
+        if any(f in batch for f in feeds)
+    }
 
 
 def stale_after_batch(batch: dict) -> tuple[list[str], list[str]]:
@@ -108,7 +121,7 @@ def stale_after_batch(batch: dict) -> tuple[list[str], list[str]]:
     cash, HR, watches, prospects alone)."""
     models = all_models()
     touched = set(batch)
-    merged = [n for n in SCD2_MERGE_ORDER if batch_deltas_covers(n, batch)]
+    merged = [n for n, spec in _MERGES.items() if touched & set(spec[0])]
     stale = set(merged)
     for name in topo_order(models):
         if name in stale:
@@ -120,53 +133,51 @@ def stale_after_batch(batch: dict) -> tuple[list[str], list[str]]:
     return merged, rebuilt
 
 
-def batch_deltas_covers(name: str, batch: dict) -> bool:
-    feeds = {
-        "accounts": ("customer_mgmt",),
-        "customers": ("customer_mgmt",),
-        "companies": ("cmp",),
-        "securities": ("sec",),
-        "financials": ("fin",),
-        "trades_history": ("trade_history",),
-    }[name]
-    return all(f in batch for f in feeds)
-
-
-def land_batch(
-    runner: Runner, batch: dict, cumulative: dict,
-    parallelism: int = 8,
-) -> tuple[list[str], list[str]]:
-    """Land ONE delta drop on an already-built warehouse:
-
-    1. row-level ``merge_refresh`` of each covered SCD2 model in topo
-       order (partition-pruned where declared), with the batch's CDC
-       delete feed purging trades in the SAME refresh;
-    2. rebuild of exactly the stale downstream cone over the
-       cumulative sources, reading merged/fresh upstreams from the
-       warehouse (``prebuilt``) instead of recomputing them;
-    3. in versioned mode, ``Runner.run`` finishes the batch with one
-       warehouse manifest commit — also when nothing downstream is
-       stale — so every batch is a consistent cross-table snapshot
-       (``read_warehouse`` pins to it).
-
-    Returns (merged models, rebuilt models)."""
+def merge_batch(runner: Runner, batch: dict, cumulative: dict) -> list[str]:
+    """Step 1 of a landing: row-level ``merge_refresh`` of each SCD2
+    model the batch covers, in merge order (partition-pruned where
+    declared), with the batch's CDC delete feed purging trades in the
+    SAME trades_history refresh. Returns the merged models."""
     deltas = batch_deltas(batch, cumulative)
-    merged, rebuilt = stale_after_batch(batch)
-    for name in merged:
-        delta_refs, replace = deltas[name]
+    for name, (delta_refs, replace) in deltas.items():
         dk = None
         if name == "trades_history" and "trade_deletes" in batch:
             dk = batch["trade_deletes"].select(
                 F.col("td_t_id").alias("trade_id"))
         runner.merge_refresh(name, delta_refs, replace=replace,
                              delete_keys=dk)
-    runner.sources = cumulative
-    models = all_models()
+    return list(deltas)
+
+
+def rebuild_stale(
+    runner: Runner, stale: list[str], parallelism: int = 8,
+    op: str = "build",
+) -> dict[str, DataFrame]:
+    """Step 2: rebuild exactly the ``stale`` models over
+    ``runner.sources``, reading every other ancestor from the warehouse
+    (``prebuilt``) instead of recomputing it. In versioned mode
+    ``Runner.run`` ends with one warehouse manifest commit — also when
+    nothing is stale."""
     prebuilt = {
         n: runner.read_model(n)
-        for n in ancestors(models, rebuilt)
-        if n not in rebuilt
+        for n in ancestors(all_models(), stale) - set(stale)
     }
-    runner.run(targets=rebuilt, parallelism=parallelism,
-               prebuilt=prebuilt)
+    return runner.run(targets=stale, parallelism=parallelism,
+                      prebuilt=prebuilt, op=op)
+
+
+def land_batch(
+    runner: Runner, batch: dict, cumulative: dict,
+    parallelism: int = 8,
+) -> tuple[list[str], list[str]]:
+    """Land ONE delta drop on an already-built versioned warehouse:
+    ``merge_batch``, then ``rebuild_stale`` of the downstream cone
+    over the cumulative sources, so every batch ends in one consistent
+    cross-table snapshot (``read_warehouse`` pins to it).
+
+    Returns (merged models, rebuilt models)."""
+    merged = merge_batch(runner, batch, cumulative)
+    rebuilt = stale_after_batch(batch)[1]
+    runner.sources = cumulative
+    rebuild_stale(runner, rebuilt, parallelism)
     return merged, rebuilt

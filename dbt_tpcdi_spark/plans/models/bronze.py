@@ -38,12 +38,12 @@ def brokerage_trade(ref, src) -> DataFrame:
 
 
 @model(layer="bronze", sources=("trade_history",),
-       # range-cluster on the trade id so incremental refreshes can
-       # FILE-PRUNE their prior-history lookup (a Batch2+ delta's
-       # touched keys are id-local): read_where("th_t_id", lo, hi)
-       # reads only the id blocks the delta spans instead of the whole
-       # bronze feed — the piece that keeps merge_refresh O(delta) at
-       # 100 TB even though it must re-derive touched keys' history
+       # range-cluster on the trade id so a trade-id window read
+       # FILE-PRUNES: read_where("th_t_id", lo, hi) reads only the id
+       # blocks the window spans (a Batch2+ delta's touched keys are
+       # id-local). bench.py's dagbig/conebig probes take touched
+       # trades' prior history this way; batch landing does not — it
+       # semi-joins the raw cumulative feed (plans.batches.batch_deltas)
        layout=Layout(range_by=("th_t_id",), stats_cols=("th_t_id",)))
 def brokerage_trade_history(ref, src) -> DataFrame:
     return src("trade_history")

@@ -36,8 +36,6 @@ class Layout:
     - ``bloom_cols``: per-file Bloom bitmaps (int/string columns
       only — enforced) → ``read_where_eq/_in`` point pruning on keys
       the sort does NOT cover.
-    - ``partition_by``: hive-style directory partitioning (coarse
-      pruning by enumeration; use for low-cardinality keys only).
     - ``files``: explicit output-partition count for the layout
       shuffle (None → Spark's default parallelism). At 100 TB leave
       None and let AQE size partitions; the explicit knob exists for
@@ -48,7 +46,6 @@ class Layout:
     bloom_cols: tuple[str, ...] = ()
     range_by: tuple[str, ...] = ()
     zorder: tuple[str, str] | None = None
-    partition_by: tuple[str, ...] = ()
     files: int | None = None
 
     def __post_init__(self) -> None:

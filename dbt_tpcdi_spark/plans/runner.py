@@ -8,7 +8,7 @@ schedule through it, and every model write — including
 ``merge_refresh``'s full-table commit — goes through ``Runner._write``,
 the one place that decides how a model is stored.
 
-Materialization modes:
+Storage modes:
 
 - ``parquet`` (default): each model is written to
   ``<warehouse>/<name>`` and read back. This mirrors the reference
@@ -16,14 +16,14 @@ Materialization modes:
   small, and gives every consumer columnar pruning/pushdown. At scale
   this is the right call for multi-consumer nodes (crm_customer_mgmt
   feeds accounts+customers; trades_history feeds trades+dim_trade).
-- ``lazy``: no materialization; returns stacked logical plans
-  (useful for plan inspection / whole-DAG Catalyst optimization).
 - ``versioned``: like ``parquet`` but every model is a
   ``plans.versioned.VersionedTable`` — each run/refresh appends an
   atomic commit instead of overwriting, so readers keep snapshot
   isolation, any build is time-travelable, and a bad refresh is
   ``restore()``-able. This is the Snowflake-parity mode (the
-  reference's tables are transactional/time-travelable for free).
+  reference's tables are transactional/time-travelable for free), and
+  the only mode ``merge_refresh`` lands deltas in: the commit is the
+  publish, so a crashed merge leaves the previous version current.
   Models declaring ``merge_partition`` are stored under an internal
   partition manifest; the rest honor their declared ``Layout``.
 
@@ -205,18 +205,11 @@ class Runner:
         self,
         spark: SparkSession,
         sources: dict[str, DataFrame],
-        warehouse_dir: str | None = None,
+        warehouse_dir: str,
         materialize: str = "parquet",
-        partition_spec: dict[str, list[str]] | None = None,
         layout_files: int | None = None,
     ) -> None:
-        """``partition_spec``: model → partition columns for the
-        parquet write (e.g. {"fact_trade": ["sk_create_date"]}) — the
-        100 TB layout (SCALE.md §1): date-partitioned facts give
-        downstream scans partition pruning. Off by default: at bench
-        scale the file-count overhead outweighs the benefit.
-
-        ``layout_files``: explicit output-file count for every model's
+        """``layout_files``: explicit output-file count for every model's
         range layout (overrides ``Layout.files``). The production
         default (None) lets AQE size the layout shuffle by data
         volume; at bench/fixture scale AQE correctly folds a tiny
@@ -226,15 +219,12 @@ class Runner:
         build (the old treatment, which inflated every intermediate
         shuffle of all 45 models: AQE ignores a repartitionByRange
         only when it carries an explicit partition count)."""
-        if materialize not in ("parquet", "lazy", "versioned"):
+        if materialize not in ("parquet", "versioned"):
             raise ValueError(materialize)
-        if materialize != "lazy" and not warehouse_dir:
-            raise ValueError(f"{materialize} materialization needs warehouse_dir")
         self.spark = spark
         self.sources = sources
         self.warehouse_dir = warehouse_dir
         self.materialize = materialize
-        self.partition_spec = partition_spec or {}
         self.layout_files = layout_files
 
     def run(
@@ -331,21 +321,12 @@ class Runner:
         - parquet mode overwrites ``<warehouse>/<name>``.
 
         ``op`` is the commit label recorded in versioned history."""
-        if self.materialize == "lazy":
-            return df
         if self.materialize == "parquet":
             path = os.path.join(self.warehouse_dir, name)
-            writer, reader = df.write.mode("overwrite"), self.spark.read
-            if name in self.partition_spec:
-                writer = writer.partitionBy(*self.partition_spec[name])
-            else:
-                # the written df's schema IS the file schema — skip the
-                # one-task footer-inference job per model. Partitioned
-                # tables re-derive partition cols from dir names, so
-                # those keep inference.
-                reader = reader.schema(df.schema)
-            writer.parquet(path)
-            return reader.parquet(path)
+            df.write.mode("overwrite").parquet(path)
+            # the written df's schema IS the file schema — skip the
+            # one-task footer-inference job per model
+            return self.spark.read.schema(df.schema).parquet(path)
         vt = self.table(name)
         m = all_models().get(name)
         if m is not None and m.merge_partition is not None:
@@ -363,20 +344,16 @@ class Runner:
             # the model's own schema (skips inference, see read())
             return vt.read(schema=df.schema)
         layout = self._layout(name)
-        partition_by = self.partition_spec.get(name) or (
-            list(layout.partition_by) or None if layout else None)
         if layout:
             df = apply_layout(df, layout)
         vt.commit(
-            df, op=op, partition_by=partition_by,
+            df, op=op,
             stats_cols=(list(layout.stats_cols) or None) if layout else None,
             bloom_cols=(list(layout.bloom_cols) or None) if layout else None,
         )
         # the just-written df's schema IS the file schema for a flat
-        # snapshot — skip the per-model inference job. Hive
-        # partition_by layouts re-derive partition cols from dir
-        # names, so those fall back to inference.
-        return vt.read(schema=None if partition_by else df.schema)
+        # snapshot — skip the per-model inference job
+        return vt.read(schema=df.schema)
 
     def _layout(self, name: str) -> Layout | None:
         """The model's declared physical layout (versioned mode honors
@@ -431,8 +408,8 @@ class Runner:
         ``scd2_key`` column; the ENTIRE version history of those keys
         is purged, applied AFTER the upsert merge (a key both updated
         and deleted in one batch ends deleted), as one anti-join —
-        O(batch) shuffle, and in versioned mode the purge lands in the
-        same atomic commit as the merge, so the change feed
+        O(batch) shuffle, and the purge lands in the same atomic
+        commit as the merge, so the change feed
         (``VersionedTable.changes``) shows the purged rows as
         ``_change_type='delete'`` tombstones of that single version
         step. A later batch re-inserting the key simply starts a fresh
@@ -444,14 +421,21 @@ class Runner:
         SCD2 model — securities/financials over companies — need that
         upstream's merge applied first, and existing rows' temporal
         matches unchanged, else fall back to a full refresh).
+
+        Versioned mode only: the merged table lands as one commit, so
+        the snapshot being read stays immutable and a crashed merge
+        leaves the pre-merge version current. A parquet ``Runner``
+        raises ``ValueError``.
         """
         from dbt_tpcdi_spark.operators.scd2 import merge_scd2
 
+        if self.materialize != "versioned":
+            raise ValueError(
+                "merge_refresh lands deltas in versioned mode only: build "
+                "the warehouse with materialize='versioned'")
         m = all_models()[name]
         if m.scd2_key is None:
             raise ValueError(f"{name} is not an SCD2 model")
-        versioned = self.materialize == "versioned"
-        path = os.path.join(self.warehouse_dir, name)
 
         def ref(n: str) -> DataFrame:
             if n in delta_refs:
@@ -463,13 +447,12 @@ class Runner:
                 return delta_refs[n]
             return self.sources[n]
 
+        vt = self.table(name)
         if (
-            versioned
-            and m.merge_partition is not None
+            m.merge_partition is not None
             and delta_refs
             and delete_keys is None
         ):
-            vt = self.table(name)
             latest = vt.latest_version()
             entry = vt._entry(latest) if latest is not None else None
             if entry is not None and entry.get("part_col") == m.merge_partition[0]:
@@ -483,12 +466,7 @@ class Runner:
                     m, vt, ref, src, replace
                 )
 
-        if versioned:
-            existing = self.table(name).read()
-        else:
-            self._adopt_stranded_swap(path)
-            existing = self.spark.read.parquet(path)
-
+        existing = vt.read()
         if delta_refs:
             delta_built = m.build(ref, src).drop(
                 "end_timestamp", "is_current")
@@ -504,32 +482,12 @@ class Runner:
                 delete_keys.select(m.scd2_key).distinct(),
                 m.scd2_key, "left_anti",
             )
-
-        if versioned:
-            # a commit IS the safe publish: the snapshot being read
-            # stays immutable, the log link is the atomic switch —
-            # no swap dance, and the pre-merge version remains
-            # readable/restorable
-            return self._write(
-                name, merged,
-                "merge_refresh+delete" if delete_keys is not None
-                else "merge_refresh",
-            )
-
-        # stage-and-swap: can't overwrite the parquet dir being read.
-        # Crash-safe ordering — the live path is never absent: write
-        # staging, rename live aside, promote staging, delete the old
-        # copy. A crash leaves either (path intact + __staging) or
-        # (path promoted + __old); _adopt_stranded_swap on the next
-        # call recovers both states.
-        import shutil
-
-        staging, old = path + "__staging", path + "__old"
-        merged.write.mode("overwrite").parquet(staging)
-        os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old)
-        return self.spark.read.parquet(path)
+        # the pre-merge version stays readable/restorable
+        return self._write(
+            name, merged,
+            "merge_refresh+delete" if delete_keys is not None
+            else "merge_refresh",
+        )
 
     def _merge_refresh_partitioned(
         self, m: Model, vt, ref, src, replace: bool
@@ -587,37 +545,6 @@ class Runner:
         finally:
             updates.unpersist()
         return vt.read()
-
-    def _adopt_stranded_swap(self, path: str) -> None:
-        """Recover a merge_refresh interrupted mid-swap (see ordering
-        comment there).
-
-        States, by crash point: (a) after the swap completed → stray
-        ``__old`` next to a live path: delete it. (b) between the two
-        renames → ``__old`` present, path absent, ``__staging`` complete
-        (has _SUCCESS): finish the promotion (staging → path, drop old)
-        so the completed merge is kept, not re-run. (c) before the
-        first rename → live path + ``__staging``: the staging copy may
-        be complete, but nothing proves it belongs to the current
-        source state, so roll forwardless: keep the live path, discard
-        staging, and let the merge re-apply. Incomplete staging (no
-        _SUCCESS) is always discarded."""
-        import shutil
-
-        staging, old = path + "__staging", path + "__old"
-        staging_complete = os.path.exists(os.path.join(staging, "_SUCCESS"))
-        if os.path.isdir(old):
-            if not os.path.isdir(path):
-                if staging_complete:  # (b): finish the interrupted promote
-                    os.rename(staging, path)
-                else:  # torn swap with no usable staging: roll back
-                    os.rename(old, path)
-            shutil.rmtree(old)  # (a)/(b): old copy is garbage
-        if os.path.isdir(staging):
-            if staging_complete and not os.path.isdir(path):
-                os.rename(staging, path)
-            else:
-                shutil.rmtree(staging)  # (c) or incomplete — discard
 
 
 def duplicate_keys(df: DataFrame, keys: list[str]) -> DataFrame:

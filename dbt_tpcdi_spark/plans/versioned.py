@@ -22,8 +22,9 @@ worth owning: it needs nothing but a POSIX filesystem with atomic
 - **Readers resolve a version once** (at ``read()``/``as_of()``) and
   only ever touch that snapshot's immutable directory — writers never
   block readers, and a reader's DataFrame stays valid across later
-  commits. This obsoletes the stage-and-swap dance ``Runner.
-  merge_refresh`` needs on bare parquet.
+  commits. That is why ``Runner.merge_refresh`` lands deltas on
+  versioned tables only: the merge reads the snapshot it replaces,
+  and the new commit is the publish.
 - ``restore(v)`` is a NEW commit whose entry points at the old
   snapshot directory (history is append-only, like Delta RESTORE);
   ``vacuum`` drops snapshot dirs unreferenced by the kept tail of the

@@ -632,13 +632,13 @@ def _install_streaming_dedup_index() -> None:
                     )
                     return
                 existing = index.read().select(
-                    "fp", F.col("first_doc").alias("__old")
+                    "fp", F.col("first_doc").alias("__prev_first")
                 )
                 changed = (
                     b.join(existing, "fp", "left")
                     .filter(
-                        F.col("__old").isNull()
-                        | (F.col("first_doc") < F.col("__old"))
+                        F.col("__prev_first").isNull()
+                        | (F.col("first_doc") < F.col("__prev_first"))
                     )
                     .select("fp", "first_doc", "fp_bucket")
                 )
@@ -715,6 +715,7 @@ def streaming_dag_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         import tempfile
         from pathlib import Path
 
+        from dbt_tpcdi_spark.plans.batches import combine_batch, merge_batch
         from dbt_tpcdi_spark.plans.runner import (
             MANIFEST_TABLE,
             Runner,
@@ -781,33 +782,17 @@ def streaming_dag_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 return (a.exceptAll(b).isEmpty()
                         and b.exceptAll(a).isEmpty())
 
-            # the refresh consumes the LANDED commits: cumulative
-            # trade state recomposed from Batch1 + the feed tables
-            touched = streamed_th.select("th_t_id").distinct()
-            cum_trade = (
-                b1["trade"].join(streamed_t.select("t_id"),
-                                 "t_id", "left_anti")
-                .unionByName(streamed_t)
-            )
-            cum_th = b1["trade_history"].unionByName(streamed_th)
-            inc.merge_refresh(
-                "trades_history",
-                {
-                    "brokerage_trade_history": cum_th.join(
-                        touched, "th_t_id", "left_semi"),
-                    "brokerage_trade": cum_trade.join(
-                        touched.withColumnRenamed("th_t_id", "t_id"),
-                        "t_id", "left_semi"),
-                },
-                replace=True,
-            )
+            # the refresh consumes the LANDED commits: the feed tables
+            # are the batch, folded onto Batch1 for the cumulative
+            # history the replace merge reads
+            streamed = {"trade": streamed_t, "trade_history": streamed_th}
+            cum2 = combine_batch(b1, streamed)
+            merge_batch(inc, streamed, cum2)
             inc.commit_manifest()
 
             # ground truth: from-scratch rebuild over Batch1+2
-            from dbt_tpcdi_spark.queries.tpcdi_gate import _combine_batch
-
             wh_full = work / "wh_full"
-            Runner(spark, _combine_batch(b1, b2),
+            Runner(spark, combine_batch(b1, b2),
                    warehouse_dir=str(wh_full)).run(
                 targets=["trades_history"], parallelism=8)
             rebuilt = spark.read.parquet(str(wh_full / "trades_history"))

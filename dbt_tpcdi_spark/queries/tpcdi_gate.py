@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_tpcdi_spark.plans.registry import all_models
-from dbt_tpcdi_spark.plans.runner import Runner, ancestors
+from dbt_tpcdi_spark.plans.runner import Runner, ancestors, read_model
 from dbt_tpcdi_spark.plans.sources import load_dag_sources
 from dbt_tpcdi_spark.queries import query
 from dbt_tpcdi_spark.sources.finwire import LAYOUTS, parse_finwire, prefix_parse
@@ -520,10 +520,10 @@ def dag_fact_trade_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the gold projection as exact cents — then cast back to double
     and compared against the SAME oracle as ``dag_fact_trade``. Proves
     the DAG is money-type-agnostic: the 100 TB deployment can flip the
-    mode for drift-free SUMs without touching a model. Plan
-    construction runs under the selector (the ``SPARK_TPCDI_PARITY``
-    pattern); scan schemas are baked at construction, so execution
-    needs no env."""
+    mode for drift-free SUMs without touching a model. The cone is
+    built into a parquet warehouse under the fixture root, so the gate
+    checks the decimal table as stored; the build runs under the
+    selector (the ``SPARK_TPCDI_PARITY`` pattern)."""
     from pyspark.sql import types as T
 
     with _PARITY_LOCK:
@@ -532,10 +532,10 @@ def dag_fact_trade_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             root = _fixture_root()
             sources = load_dag_sources(spark, str(root / "raw"))
-            built = Runner(spark, sources, materialize="lazy").run(
-                targets=["fact_trade"]
-            )
-            df = built["fact_trade"]
+            wh = root / f"wh_decimal_{spark.sparkContext.applicationId}"
+            df = Runner(spark, sources, warehouse_dir=str(wh)).run(
+                targets=["fact_trade"], parallelism=8
+            )["fact_trade"]
         finally:
             if prev is None:
                 os.environ.pop("SPARK_TPCDI_MONEY", None)
@@ -626,18 +626,21 @@ def dag_fact_market_history_strict(
 from dbt_tpcdi_spark.plans.batches import (  # noqa: E402
     SCD2_MERGE_ORDER,
     combine_batch as _combine_batch,
-    batch_deltas as _batch_deltas,
+    merge_batch,
+    rebuild_stale,
+    stale_after_batch,
 )
 
 
 def _incremental_vs_rebuild(spark: SparkSession) -> list[tuple[str, bool]]:
     """Build the SCD2 cone twice — full rebuild over Batch1+2+3 vs
-    Batch1 build + TWO successive per-model merge_refresh rounds
+    a versioned Batch1 build + TWO successive ``merge_batch`` rounds
     (Batch2 then Batch3, proving merges compose on an already-merged
     warehouse) — and EXCEPT-ALL compare each model. The batches' CDC
     DELETE feed is deliberately NOT applied on either side here (pure
-    upsert-merge equivalence); ``_incremental_deletes`` covers the
-    delete-aware replay. Memoized per SparkSession."""
+    upsert-merge equivalence: the batch dict drops ``trade_deletes``);
+    ``_incremental_deletes`` covers the delete-aware replay. Memoized
+    per SparkSession."""
     key = ("incremental", spark.sparkContext.applicationId)
     if key in _CACHE:
         return _CACHE[key]
@@ -663,18 +666,17 @@ def _incremental_vs_rebuild_locked(
         targets, parallelism=8)
 
     wh_inc = root / f"wh_inc_{spark.sparkContext.applicationId}"
-    inc = Runner(spark, b1, warehouse_dir=str(wh_inc))
+    inc = Runner(spark, b1, warehouse_dir=str(wh_inc),
+                 materialize="versioned")
     inc.run(targets, parallelism=8)
 
     for batch, cumulative in ((b2, cum2), (b3, cum3)):
-        deltas = _batch_deltas(batch, cumulative)
-        for name in SCD2_MERGE_ORDER:
-            delta_refs, replace = deltas[name]
-            inc.merge_refresh(name, delta_refs, replace=replace)
+        upserts = {k: v for k, v in batch.items() if k != "trade_deletes"}
+        assert merge_batch(inc, upserts, cumulative) == targets
 
     results = []
     for name in SCD2_MERGE_ORDER:
-        merged = spark.read.parquet(str(wh_inc / name))
+        merged = inc.read_model(name)
         rebuilt = spark.read.parquet(str(wh_full / name))
         equal = (merged.exceptAll(rebuilt).isEmpty()
                  and rebuilt.exceptAll(merged).isEmpty())
@@ -711,10 +713,10 @@ def warehouse_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_deletes(spark: SparkSession) -> list[tuple[str, bool]]:
-    """Delete-aware Batch2/3 replay: Batch1 build + two merge_refresh
-    rounds where each batch's CDC DELETE feed (TradeDeletes.txt,
-    fixtures.TRADE_DELETES2/3) purges trades alongside the upsert
-    merge. Ground truth replays the FULL history: a from-scratch
+    """Delete-aware Batch2/3 replay: versioned Batch1 build + two
+    ``merge_batch`` rounds where each batch's CDC DELETE feed
+    (TradeDeletes.txt, fixtures.TRADE_DELETES2/3) purges trades
+    alongside the upsert merge. Ground truth replays the FULL history: a from-scratch
     rebuild over Batch1+2+3 with the purged keys' rows removed from
     the rebuilt table. Also asserts the purge was non-vacuous (the
     keys existed in the rebuild and are gone after). Memoized per
@@ -737,19 +739,12 @@ def _incremental_deletes(spark: SparkSession) -> list[tuple[str, bool]]:
         wh_del = root / f"wh_del_{spark.sparkContext.applicationId}"
 
         targets = list(SCD2_MERGE_ORDER)
-        inc = Runner(spark, b1, warehouse_dir=str(wh_del))
+        inc = Runner(spark, b1, warehouse_dir=str(wh_del),
+                     materialize="versioned")
         inc.run(targets, parallelism=8)
         for batch, cumulative in ((b2, cum2), (b3, cum3)):
-            deltas = _batch_deltas(batch, cumulative)
-            for name in SCD2_MERGE_ORDER:
-                delta_refs, replace = deltas[name]
-                dk = None
-                if name == "trades_history":
-                    dk = batch["trade_deletes"].select(
-                        F.col("td_t_id").alias("trade_id")
-                    )
-                inc.merge_refresh(name, delta_refs, replace=replace,
-                                  delete_keys=dk)
+            assert "trade_deletes" in batch
+            assert merge_batch(inc, batch, cumulative) == targets
 
         del_ids = (
             b2["trade_deletes"].unionByName(b3["trade_deletes"])
@@ -757,7 +752,7 @@ def _incremental_deletes(spark: SparkSession) -> list[tuple[str, bool]]:
         )
         checks: list[tuple[str, bool]] = []
         for name in SCD2_MERGE_ORDER:
-            merged = spark.read.parquet(str(wh_del / name))
+            merged = inc.read_model(name)
             expected = spark.read.parquet(str(wh_full / name))
             if name == "trades_history":
                 expected = expected.join(del_ids, "trade_id", "left_anti")
@@ -774,7 +769,7 @@ def _incremental_deletes(spark: SparkSession) -> list[tuple[str, bool]]:
         ))
         checks.append((
             "trade_deletes_absent_after",
-            spark.read.parquet(str(wh_del / "trades_history"))
+            inc.read_model("trades_history")
             .join(del_ids, "trade_id", "left_semi").isEmpty(),
         ))
         _CACHE[key] = checks
@@ -829,7 +824,8 @@ def dag_incremental_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _batches_cli_checks(spark: SparkSession) -> list[tuple[str, bool]]:
     """Drive the ACTUAL user command (``python -m dbt_tpcdi_spark
-    build --batches 1,2,3 --versioned``) over the fixture tree, then
+    build --batches 1,2,3``, versioned because it lists later
+    batches) over the fixture tree, then
     prove the landed warehouse equals a from-scratch Batch1+2+3
     rebuild: every one of the 45 model tables row-for-row (EXCEPT-ALL
     both directions), with the CDC-deleted trades removed from the
@@ -855,7 +851,7 @@ def _batches_cli_checks(spark: SparkSession) -> list[tuple[str, bool]]:
         rc = cli_main([
             "build", "--raw-dir", str(root / "raw"),
             "--warehouse", str(wh_cli), "--batches", "1,2,3",
-            "--versioned", "--parallelism", "8",
+            "--parallelism", "8",
         ])
         checks: list[tuple[str, bool]] = [("cli_exit_zero", rc == 0)]
 
@@ -906,7 +902,7 @@ def _batches_cli_checks(spark: SparkSession) -> list[tuple[str, bool]]:
 )
 def dag_batches_cli(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-command Batch1+2+3 load (VERDICT r11 item 5): ``build
-    --batches 1,2,3 --versioned`` lands Batch2 then Batch3 via
+    --batches 1,2,3`` lands Batch2 then Batch3 on versioned tables via
     row-level SCD2 merge (partition-pruned where declared) + CDC
     deletes, rebuilds only the stale downstream cone reading merged
     upstreams from the warehouse, and commits one manifest per batch.
@@ -1270,40 +1266,24 @@ AUDIT_SCD2 = ("accounts", "customers", "companies", "securities",
               "financials", "trades_history")
 AUDIT_TARGETS = ("fact_trade", "fact_cash_transactions", "fact_watches",
                  "fact_holdings", "financials")
-#: the models downstream of a trades_history delete purge, in topo
-#: order — rebuilt after the CDC merge so the audited facts reflect it
-_AUDIT_TRADES_CONE = ("trades", "dim_trade", "holdings_history",
-                      "fact_trade", "fact_holdings")
 
 
 def _audit_state(
     spark: SparkSession, wh, sources: dict, deletes: DataFrame | None
 ):
-    """Build one per-batch warehouse state: full run over the batch's
-    cumulative sources, then (Batch2+) the CDC delete merge on
-    trades_history followed by a stage-and-swap rebuild of the trades
-    cone, so the audited facts include the purge."""
-    r = Runner(spark, sources, warehouse_dir=str(wh))
-    r.run(targets=list(AUDIT_TARGETS), parallelism=8)
+    """Build one per-batch warehouse state: versioned run over the
+    batch's cumulative sources, then (Batch2+) the CDC delete feed
+    landed as a delete-only batch — ``merge_batch`` purges
+    trades_history, ``rebuild_stale`` rebuilds the built models
+    downstream of it — so the audited facts include the purge."""
+    r = Runner(spark, sources, warehouse_dir=str(wh),
+               materialize="versioned")
+    built = r.run(targets=list(AUDIT_TARGETS), parallelism=8)
     if deletes is not None:
-        import shutil
-
-        r.merge_refresh(
-            "trades_history", {},
-            delete_keys=deletes.select(
-                F.col("td_t_id").alias("trade_id")))
-        models = all_models()
-        for name in _AUDIT_TRADES_CONE:
-            df = models[name].build(
-                lambda n: spark.read.parquet(str(wh / n)),
-                sources.__getitem__,
-            )
-            staging = str(wh / name) + "__staging"
-            df.write.mode("overwrite").parquet(staging)
-            old = str(wh / name) + "__old"
-            os.rename(str(wh / name), old)
-            os.rename(staging, str(wh / name))
-            shutil.rmtree(old)
+        batch = {"trade_deletes": deletes}
+        merge_batch(r, batch, sources)
+        rebuild_stale(
+            r, [n for n in stale_after_batch(batch)[1] if n in built])
     return r
 
 
@@ -1324,8 +1304,8 @@ def _rowcount_checks(
             "th_t_id", "left_anti")
     n_trades = surviving.count()
     n_hist = hist.count()
-    ft = spark.read.parquet(str(wh / "fact_trade")).count()
-    dt = spark.read.parquet(str(wh / "dim_trade")).count()
+    ft = read_model(spark, str(wh), "fact_trade").count()
+    dt = read_model(spark, str(wh), "dim_trade").count()
     return [
         (f"{tag}__fact_trade_rowcount", abs(ft - n_trades)),
         (f"{tag}__dim_trade_rowcount", abs(dt - n_hist)),
@@ -1337,8 +1317,8 @@ def _scd2_invariant_checks(
 ) -> list[tuple[str, int]]:
     """No overlapping versions, exactly one is_current per key, and
     the open version carries the 9999 sentinel — recomputed
-    INDEPENDENTLY from the stored tables (windows over the parquet,
-    not the builder's own columns)."""
+    INDEPENDENTLY from the stored tables (windows over the stored
+    rows, not the builder's own columns)."""
     from pyspark.sql import Window
 
     from dbt_tpcdi_spark.operators.scd2 import SCD2_SENTINEL
@@ -1346,7 +1326,7 @@ def _scd2_invariant_checks(
     out = []
     models = all_models()
     for m in AUDIT_SCD2:
-        df = spark.read.parquet(str(wh / m))
+        df = read_model(spark, str(wh), m)
         key = models[m].scd2_key
         cur = (
             df.groupBy(key)
@@ -1381,7 +1361,7 @@ def _ri_window_checks(spark: SparkSession, wh) -> list[tuple[str, int]]:
     the fact's own timestamp — a dangling sk OR an out-of-window match
     both count as violations."""
     def read(n):
-        return spark.read.parquet(str(wh / n))
+        return read_model(spark, str(wh), n)
 
     def bad(fact, ts_expr, dim, sk, dim_ts="effective_timestamp"):
         d = read(dim).select(

@@ -17,10 +17,10 @@ metadata-driven selective recompute:
 
 This keeps the reference's only-ever-exercised behavior (Batch1 full
 load, then refresh-on-change; README.md:53-55 defers Batch2/3) while
-giving O(changed subtree) incremental cost. True row-level
-incrementality (MERGE for late SCD2 rows) is the documented v2 step
-(SURVEY.md §7.4) and needs a table format with upserts (Delta/Iceberg,
-not in this image).
+giving O(changed subtree) incremental cost. Row-level incrementality
+(MERGE of Batch2/3 SCD2 deltas) is ``plans.batches.land_batch`` on a
+versioned warehouse; ``refresh()`` shares its cone rebuild
+(``rebuild_stale``).
 """
 
 from __future__ import annotations
@@ -31,13 +31,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+from dbt_tpcdi_spark.plans.batches import rebuild_stale
 from dbt_tpcdi_spark.plans.registry import all_models
-from dbt_tpcdi_spark.plans.runner import (
-    MANIFEST_TABLE,
-    Runner,
-    ancestors,
-    topo_order,
-)
+from dbt_tpcdi_spark.plans.runner import MANIFEST_TABLE, Runner, topo_order
 from dbt_tpcdi_spark.plans.sources import DELIMITED_FILES, load_dag_sources
 from dbt_tpcdi_spark.plans.versioned import is_versioned
 
@@ -124,7 +120,7 @@ class IncrementalRunner:
     def refresh(self) -> dict[str, str]:
         """Bring every model up to date; returns name → 'refreshed' |
         'fresh'. A model is stale when its fingerprint moved or its
-        table is missing; the stale set rebuilds through ``Runner.run``
+        table is missing; the stale set rebuilds through ``rebuild_stale``
         with its fresh ancestors read from the warehouse, so refresh
         writes each model exactly as a build does. A warehouse that
         carries a run manifest is versioned: every rebuilt model is a
@@ -152,13 +148,6 @@ class IncrementalRunner:
             self.warehouse_dir,
             materialize="versioned" if versioned else "parquet",
         )
-        runner.run(
-            targets=stale,
-            prebuilt={
-                n: runner.read_model(n)
-                for n in ancestors(all_models(), stale) - set(stale)
-            },
-            op="refresh",
-        )
+        rebuild_stale(runner, stale, parallelism=1, op="refresh")
         self._save_state(fps)
         return {n: "refreshed" if n in stale else "fresh" for n in fps}

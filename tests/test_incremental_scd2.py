@@ -1,7 +1,8 @@
-"""Batch2-style row-level incremental SCD2 refresh: building with only
-the first batch of trade history, then merge-refreshing the second
-batch, must equal a full rebuild over everything — including status
-rows that rewrite existing versions' end_timestamp/is_current."""
+"""Batch2-style row-level incremental SCD2 refresh: building a versioned
+warehouse with only the first batch of trade history, then
+merge-refreshing the second batch, must equal a full rebuild over
+everything — including status rows that rewrite existing versions'
+end_timestamp/is_current."""
 
 from __future__ import annotations
 
@@ -36,10 +37,11 @@ def test_merge_refresh_trades_history(spark, tmp_path):
     inc_wh = str(root / "wh_inc")
     b1_sources = dict(sources)
     b1_sources["trade_history"] = batch1
-    runner = Runner(spark, b1_sources, warehouse_dir=inc_wh)
+    runner = Runner(spark, b1_sources, warehouse_dir=inc_wh,
+                    materialize="versioned")
     runner.run(["trades_history"])
 
-    n_before = spark.read.parquet(f"{inc_wh}/trades_history").count()
+    n_before = runner.read_model("trades_history").count()
     merged = runner.merge_refresh(
         "trades_history", {"brokerage_trade_history": batch2}
     )
@@ -92,7 +94,7 @@ def test_merge_refresh_replace_rewrites_attributes(spark, tmp_path):
     expected = spark.read.parquet(f"{full_wh}/trades_history")
 
     inc_wh = str(root / "wh_inc")
-    runner = Runner(spark, b1, warehouse_dir=inc_wh)
+    runner = Runner(spark, b1, warehouse_dir=inc_wh, materialize="versioned")
     runner.run(["trades_history"])
     touched = b2["trade_history"].select("th_t_id").distinct()
     merged = runner.merge_refresh(
@@ -184,14 +186,22 @@ def test_merge_refresh_partitioned_equals_rebuild(spark, tmp_path):
 
 
 def test_merge_refresh_rejects_non_scd2(spark, tmp_path):
+    """merge_refresh refuses a model without an SCD2 key, and any model
+    of a parquet warehouse: deltas land on versioned tables only."""
     import pytest
 
     root = generate(tmp_path / "b2x")
     sources = load_dag_sources(spark, str(root / "raw"))
-    runner = Runner(spark, sources, warehouse_dir=str(root / "wh"))
-    runner.run(["employees"])
-    with pytest.raises(ValueError, match="not an SCD2 model"):
-        runner.merge_refresh("employees", {})
+    versioned = Runner(spark, sources, warehouse_dir=str(root / "wh_v"),
+                       materialize="versioned")
+    versioned.run(["employees"])
+    parquet = Runner(spark, sources, warehouse_dir=str(root / "wh"))
+    for runner, name, match in (
+        (versioned, "employees", "not an SCD2 model"),
+        (parquet, "trades_history", "versioned"),
+    ):
+        with pytest.raises(ValueError, match=match):
+            runner.merge_refresh(name, {})
 
 
 def test_merge_refresh_delete_keys_purges_history(spark, tmp_path):
@@ -213,7 +223,8 @@ def test_merge_refresh_delete_keys_purges_history(spark, tmp_path):
     inc_wh = str(root / "wh_inc")
     b1_sources = dict(sources)
     b1_sources["trade_history"] = batch1
-    runner = Runner(spark, b1_sources, warehouse_dir=inc_wh)
+    runner = Runner(spark, b1_sources, warehouse_dir=inc_wh,
+                    materialize="versioned")
     runner.run(["trades_history"])
 
     dk = spark.createDataFrame([(9003,)], "trade_id bigint")
@@ -231,7 +242,7 @@ def test_merge_refresh_delete_keys_purges_history(spark, tmp_path):
         replace=True,
         delete_keys=dk,
     )
-    merged = spark.read.parquet(f"{inc_wh}/trades_history")
+    merged = runner.read_model("trades_history")
     want = expected.filter(F.col("trade_id") != 9003)
     assert _rows(merged) == _rows(want)
     assert expected.filter(F.col("trade_id") == 9003).count() > 0
@@ -239,7 +250,7 @@ def test_merge_refresh_delete_keys_purges_history(spark, tmp_path):
     # delete-only refresh: no delta_refs at all
     dk2 = spark.createDataFrame([(9001,)], "trade_id bigint")
     runner.merge_refresh("trades_history", {}, delete_keys=dk2)
-    merged2 = spark.read.parquet(f"{inc_wh}/trades_history")
+    merged2 = runner.read_model("trades_history")
     assert _rows(merged2) == _rows(
         expected.filter(~F.col("trade_id").isin(9001, 9003)))
 

@@ -58,6 +58,39 @@ def test_failing_model_commits_no_manifest(spark, tmp_path, monkeypatch):
     assert "dim_broker" not in committed
 
 
+def test_failing_model_parquet_keeps_previous_tables(
+        spark, tmp_path, monkeypatch):
+    """Parquet ``run(parallelism=8)`` with one model's builder raising:
+    the error propagates once in-flight siblings finish, upstream
+    tables rewritten in this run and the failed model's previous table
+    read back whole, and nothing downstream of it is written."""
+    root = generate(tmp_path / "fx")
+    sources = load_dag_sources(spark, str(root / "raw"))
+    wh = str(tmp_path / "wh")
+    Runner(spark, sources, warehouse_dir=wh).run(targets=["employees"])
+
+    def rows(n):
+        return spark.read.parquet(os.path.join(wh, n)).count()
+
+    before = {n: rows(n) for n in ("hr_employee", "employees")}
+    assert before["hr_employee"] > 0
+
+    def boom(ref, src):
+        raise _BuilderFailed("employees")
+
+    models = registry.all_models()
+    monkeypatch.setitem(registry.MODELS, "employees",
+                        dataclasses.replace(models["employees"], build=boom))
+    with pytest.raises(_BuilderFailed):
+        Runner(spark, sources, warehouse_dir=wh).run(parallelism=8)
+
+    assert {n: rows(n) for n in before} == before
+    written = [n for n in models if os.path.isdir(os.path.join(wh, n))]
+    for n in written:
+        rows(n)
+    assert "dim_broker" not in written
+
+
 class _GroupedRunner(Runner):
     """Tags every model write's Spark jobs with one job group. Job
     groups are thread-local and ``run`` writes on pool threads, so the
